@@ -10,8 +10,9 @@ DataFrame programs — the same plan GraphFrames produces:
   small-star: for each node u, attach every neighbor v <= u to the minimum
 
 Each round is two shuffles on the node id; convergence is detected by a
-star-forest test on the round's own output (no member is also a parent —
-the algorithm's fixed point, checked without re-running a confirm round);
+star-forest test on the round's own output (every member has one parent
+and is no parent itself — the algorithm's fixed point, checked without
+re-running a confirm round);
 ``localCheckpoint`` every round truncates the plan/lineage (an iterative
 algorithm would otherwise compound the DAG). Deterministic: ids are
 longs, min-based, no randomness.
@@ -75,20 +76,25 @@ def connected_components(
     e = _canonical_edges(edges, src, dst).localCheckpoint()
     for _ in range(max_iterations):
         e = _small_star(_large_star(e)).localCheckpoint()
-        # convergence = the edge set is a STAR FOREST: no member (v) is
-        # also a parent (u). LS/SS preserve per-component connectivity
-        # and canonical edges keep u < v, so two-level + connected means
-        # one root per component — exactly the algorithm's fixed point.
-        # Testing the round's OWN output this way saves the +1 confirm
-        # round the previous checksum-equality test needed (it could
-        # only see the fixed point by re-running a full round and
-        # observing no change); the semi join costs one exchange against
-        # the round's ~6, and short-circuits via isEmpty's limit-1 on
+        # convergence = the edge set is a STAR FOREST: every member (v)
+        # has exactly one parent (u) and is not itself a parent. LS/SS
+        # preserve per-component connectivity and canonical edges keep
+        # u < v, so that means one root per component — exactly the
+        # algorithm's fixed point. "No member is a parent" alone is not
+        # enough: a member with two parents passes it while its two
+        # roots still name one component twice. Both conditions are one
+        # grouped count per node: a node seen as a member (m >= 1) in
+        # two or more edges (as member or parent) breaks the forest.
+        # Testing the round's OWN output saves the +1 confirm round a
+        # checksum-equality test needs; isEmpty's limit-1 short-circuits
         # non-converged rounds.
-        chains = e.alias("a").join(
-            e.alias("b"), F.col("a.v") == F.col("b.u"), "left_semi"
+        seen = e.select(F.col("v").alias("n"), F.lit(1).alias("m")).unionByName(
+            e.select(F.col("u").alias("n"), F.lit(0).alias("m"))
         )
-        if chains.isEmpty():
+        broken = seen.groupBy("n").agg(
+            F.sum("m").alias("m"), F.count(F.lit(1)).alias("c")
+        ).where((F.col("m") >= 1) & (F.col("c") >= 2))
+        if broken.isEmpty():
             break
     else:
         raise RuntimeError(f"connected components did not converge in {max_iterations} rounds")

@@ -3,20 +3,21 @@
 Reference counterpart: ParseIntoSOGTables.java:100-124 (thread-pool Rio
 parse) + LoadIntoTable.java:283-368 (term decomposition). Here:
 
-  source_files --sha2(content,256) [JVM]--> mapInArrow(RE2-vectorized NT
-               parse + 9-part IRI decomposition on Arrow kernels;
-               escaped/Turtle/RDF-XML files fall back per file to the
-               pandas twin) --> statements frame
+  source_files --sha2(content,256) [JVM]--> mapInArrow(per-file parse,
+               sources/ntriples + 9-part IRI decomposition on Arrow
+               kernels) --> statements frame
 
 Scale notes:
 - the parser is the only Python boundary in the whole load path; it is
-  Arrow-batched and line-vectorized (no per-row Python; the NT fast path
-  never materializes Python string objects at all).
-- IRI decomposition happens *inside the same batch* (functions.uri_pandas):
-  doing it as a Catalyst projection expands to a >64KB generated method,
-  kicking whole-stage codegen into interpreted fallback (observed OOM at
-  default driver memory). The Catalyst twin (functions.uri.decompose_iri)
-  is kept for the SQL-oracle operators and cross-checked in tests.
+  Arrow-batched and line-vectorized for N-Triples and line-oriented
+  Turtle (no per-row Python; no Python string objects except for escaped
+  terms and the per-file Turtle tokenizer / RDF/XML walker).
+- IRI decomposition happens *inside the same batch*
+  (functions.uri.decompose_arrow): doing it as a Catalyst projection
+  expands to a >64KB generated method, kicking whole-stage codegen into
+  interpreted fallback (observed OOM at default driver memory). The
+  Catalyst twin (functions.uri.decompose_iri) is kept for the SQL-oracle
+  operators and cross-checked in tests.
 - bnode labels are renumbered to cluster-stable ids with
   ``xxhash64(file_sha256, label)`` — the reference's global AtomicLong
   (ParseIntoSOGTables.java:65) is illegal under Spark retry semantics;
@@ -31,12 +32,8 @@ import functools
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.uri import decompose_iri
 from ..sources.fixtures import DEFAULT_GRAPH
-from ..sources.ntriples import DECOMPOSED_SCHEMA, STATEMENT_SCHEMA
-
-META_COLS = ["file_sha256", "line_no"]
-LEX_COLS = ["s_kind", "s_lex", "p_iri", "o_kind", "o_lex", "o_lang", "o_datatype", "g_iri"]
+from ..sources.ntriples import DECOMPOSED_SCHEMA, STATEMENT_SCHEMA, parse_iterator_arrow
 
 
 def parse_statements(
@@ -50,8 +47,6 @@ def parse_statements(
     Rows that fail to parse are kept with ``parse_error`` set so lineage can
     count them; downstream stages filter them out.
     """
-    from ..sources.ntriples_arrow import parse_iterator_arrow
-
     spark = source_files.sparkSession
     target = spark.sparkContext.defaultParallelism * 3
     # File text compresses ~100x in parquet, so byte-based file splits can
@@ -61,10 +56,6 @@ def parse_statements(
     if not source_files.isStreaming and source_files.rdd.getNumPartitions() < target:
         source_files = source_files.repartition(target)
     with_sha = source_files.withColumn("file_sha256", F.sha2(F.col("content"), 256))
-    # mapInArrow + the RE2/pyarrow parser: escape-free NT files parse on
-    # Arrow kernels end to end (no Python-object string columns, no
-    # pandas round-trip at the boundary); escaped/Turtle/RDF-XML files
-    # fall back per file to the pandas twin inside the same iterator
     fn = functools.partial(
         parse_iterator_arrow, default_graph=default_graph, decompose=decompose
     )
@@ -88,24 +79,8 @@ def _bnode_ids(df: DataFrame) -> DataFrame:
     )
 
 
-def decompose_statements(raw: DataFrame) -> DataFrame:
-    """Catalyst-side decomposition of a lexical statement frame. Used for
-    cross-checking the pandas path and by oracle-checked operators; the
-    production Stage E path decomposes in pandas (see module docstring)."""
-    good = raw.where(F.col("parse_error").isNull()).drop("parse_error")
-    s_parts = decompose_iri(F.when(F.col("s_kind") == "iri", F.col("s_lex")))
-    o_parts = decompose_iri(F.when(F.col("o_kind") == "iri", F.col("o_lex")))
-    out = good.select(
-        *META_COLS,
-        *LEX_COLS,
-        *[s_parts[k].alias(f"s_{k}") for k in s_parts],
-        *[o_parts[k].alias(f"o_{k}") for k in o_parts],
-    )
-    return _bnode_ids(out)
-
-
 def extract(source_files: DataFrame, default_graph: str = DEFAULT_GRAPH) -> DataFrame:
-    """Full Stage E: parse + decompose (pandas path) + stable bnode ids.
+    """Full Stage E: parse + decompose (Arrow batch) + stable bnode ids.
 
     Width matters at scale: IRI lexical forms are fully carried by their 9
     parts, so ``s_lex``/``o_lex`` are nulled for IRIs (kept for literal

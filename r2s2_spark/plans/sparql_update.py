@@ -742,26 +742,28 @@ def _quads_to_statements(quads: DataFrame, stage: str) -> DataFrame:
     recovered from the ``b<id>`` lexical form, synthetic provenance
     (updates have no source file; ``file_id``/``line_no`` only feed the
     router's salt and must be deterministic)."""
-    from ..functions.uri_pandas import decompose_series
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import StringType, StructField, StructType
 
-    passthrough = [f.name for f in quads.schema.fields]
-    schema = ", ".join(
-        [f"`{n}` string" for n in passthrough]
-        + [f"s_{k} string" for k in PART_KEYS]
-        + [f"o_{k} string" for k in PART_KEYS]
+    from ..functions.uri import decompose_arrow
+
+    schema = StructType(
+        quads.schema.fields
+        + [StructField(f"{r}_{k}", StringType()) for r in ("s", "o") for k in PART_KEYS]
     )
 
     def gen(batches):
-        for pdf in batches:
-            out = pdf.copy()
-            s_parts = decompose_series(pdf["s"].where(pdf["s_kind"] == "iri"))
-            o_parts = decompose_series(pdf["o_lex"].where(pdf["o_kind"] == "iri"))
-            for key in PART_KEYS:
-                out[f"s_{key}"] = s_parts[key]
-                out[f"o_{key}"] = o_parts[key]
-            yield out
+        null = pa.scalar(None, pa.string())
+        for rb in batches:
+            cols = dict(zip(rb.schema.names, rb.columns))
+            for role, lex in (("s", "s"), ("o", "o_lex")):
+                iri = pc.if_else(pc.equal(cols[f"{role}_kind"], "iri"), cols[lex], null)
+                for k, v in decompose_arrow(iri).items():
+                    cols[f"{role}_{k}"] = v
+            yield pa.RecordBatch.from_arrays(list(cols.values()), names=list(cols))
 
-    parts = quads.mapInPandas(gen, schema)
+    parts = quads.mapInArrow(gen, schema)
     return parts.select(
         F.col("s_kind"),
         F.col("o_kind"),

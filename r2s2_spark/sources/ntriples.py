@@ -1,83 +1,63 @@
-"""Vectorized N-Triples / N-Quads batch parser (pandas, Arrow-friendly).
+"""Stage E's parse: N-Triples / N-Quads lines on Arrow kernels (RE2), and
+the per-file routing of every syntax, inside one ``mapInArrow`` batch.
 
 The reference parses with rdf4j Rio on a thread pool, one file per thread
-(ParseIntoSOGTables.java:91-96,402-445). Our parser is a *batch* pandas
-program meant to run inside ``mapInPandas``: one Arrow batch of
-``source_files`` rows in, one batch of statement rows out. N-Triples is
-line-oriented, so the whole parse is pandas str ops + one compiled regex —
-no per-row Python UDF, per the input contract.
+(ParseIntoSOGTables.java:91-96,402-445), choosing the format by file
+extension (:138-141). Here the ``lang`` column picks the parser per FILE:
+
+- N-Triples / N-Quads (any other or a NULL lang): the line regex below,
+  vectorized over all lines of the batch — string columns never become
+  Python objects;
+- Turtle: the line-oriented subset on Arrow kernels (:mod:`turtle_arrow`),
+  and the files it cannot prove eligible through the tokenizer
+  (:mod:`turtle`);
+- RDF/XML: the per-file ElementTree walker (:mod:`rdfxml`).
+
+All three producers emit the same lexical columns, and one shared
+:func:`_finish` decomposes IRIs (:func:`functions.uri.decompose_arrow`)
+and assembles the ``RecordBatch``.
 
 Output statement columns (the pre-decomposition IR; SURVEY.md §3.1):
-  repo, path, commit, file_sha256, line_no,
+  file_sha256, line_no,
   s_kind ('iri'|'bnode'), s_lex (IRI string | bnode label),
   p_iri,
   o_kind ('iri'|'bnode'|'literal'), o_lex (IRI | label | lexical form),
   o_lang (lang tag | NULL), o_datatype (datatype IRI | NULL for non-literal),
   g_iri (explicit quad graph, else the per-file default graph —
-         ParseIntoSOGTables.java:355-357).
+         ParseIntoSOGTables.java:355-357),
+  parse_error (the offending line, cut to 200 chars, on rows that failed).
 
 Plain literals get xsd:string (RDF 1.1). RDF-star quoted triples are
 rejected, matching the reference (GroupOfColumns.java:64-66).
+
+Line regex: RE2 reports a non-participating group as '' rather than
+NULL, so each group captures its delimiter too (``<iri>`` keeps its angle
+brackets, ``"lit"`` its quotes, ``@lang``/``^^<dt>`` their markers); an
+empty group then always means "absent", and the markers are sliced off
+afterwards. Escapes (``\\t``, ``\\"``, ``\\u00E9``, ...) are resolved
+only in the term values that hold a backslash, by the tokenizer's
+:func:`turtle.unescape` — one left-to-right pass, so ``\\\\n`` stays a
+backslash followed by 'n'.
+
+One visible semantic nuance: RE2's ``\\s`` is ASCII whitespace while
+CPython's is Unicode. The N-Triples grammar only allows ASCII space/tab
+between terms, so conforming input parses as any N-Triples parser does;
+a line using exotic Unicode separators is kept as a ``parse_error`` row.
 """
 
 from __future__ import annotations
 
-import re
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
-from ..functions import uri_pandas
+from ..functions.uri import PART_KEYS, decompose_arrow
 from ..naming import XSD_STRING
-
-# One compiled regex per line. Literal bodies honour N-Triples escapes
-# (\" inside is matched by the (?:[^"\\]|\\.)* alternation).
-_IRI = r"<(?P<{0}>[^<>\s]*)>"
-_BN = r"(?P<{0}>_:[A-Za-z0-9][A-Za-z0-9._\-]*)"
-LINE_RE = re.compile(
-    r"^\s*"
-    rf"(?:{_IRI.format('s_iri')}|{_BN.format('s_bn')})"
-    r"\s+"
-    rf"{_IRI.format('p_iri')}"
-    r"\s+"
-    rf"(?:{_IRI.format('o_iri')}|{_BN.format('o_bn')}|"
-    r'"(?P<o_lit>(?:[^"\\]|\\.)*)"'
-    r"(?:@(?P<o_lang>[A-Za-z][A-Za-z0-9]*(?:-[A-Za-z0-9]+)*)"
-    rf"|\^\^{_IRI.format('o_dt')})?)"
-    r"\s*"
-    rf"(?:{_IRI.format('g_iri')}|{_BN.format('g_bn')})?"
-    r"\s*\.\s*(?:#.*)?$"
-)
-
-_ESCAPE_RE = re.compile(r"\\(?:[tbnrf\"'\\]|u[0-9A-Fa-f]{4}|U[0-9A-Fa-f]{8})")
-_ESCAPE_MAP = {
-    "t": "\t",
-    "b": "\b",
-    "n": "\n",
-    "r": "\r",
-    "f": "\f",
-    '"': '"',
-    "'": "'",
-    "\\": "\\",
-}
-
-
-def _unescape_one(m: re.Match) -> str:
-    body = m.group(0)[1:]
-    if body[0] in "uU":
-        return chr(int(body[1:], 16))
-    return _ESCAPE_MAP[body]
-
-
-def _unescape(col: pd.Series) -> pd.Series:
-    """Resolve N-Triples escapes; fast path skips rows without backslash."""
-    mask = col.str.contains("\\", regex=False, na=False)
-    if mask.any():
-        col = col.copy()
-        col.loc[mask] = col.loc[mask].str.replace(_ESCAPE_RE, _unescape_one, regex=True)
-    return col
-
+from .rdfxml import parse_rdfxml
+from .turtle import parse_turtle, unescape
+from .turtle_arrow import parse_turtle_arrow
 
 STATEMENT_COLUMNS = [
     "file_sha256",
@@ -100,146 +80,213 @@ STATEMENT_SCHEMA = (
     "g_iri string, parse_error string"
 )
 
-_PART_COLS = [f"{role}_{k}" for role in ("s", "o") for k in uri_pandas.PART_KEYS]
+_PART_COLS = [f"{role}_{k}" for role in ("s", "o") for k in PART_KEYS]
 DECOMPOSED_COLUMNS = STATEMENT_COLUMNS + _PART_COLS
 DECOMPOSED_SCHEMA = STATEMENT_SCHEMA + ", " + ", ".join(f"{c} string" for c in _PART_COLS)
 
+_BIG = 2**30
+_NULL_STR = pa.scalar(None, pa.string())
+_TURTLE = pa.array(["turtle", "ttl"])
+_RDFXML = pa.array(["rdfxml", "rdf", "xml", "rdf/xml"])
 
-def parse_batch(pdf: pd.DataFrame, default_graph: str, decompose: bool = False) -> pd.DataFrame:
-    """Parse one batch of source_files rows into statement rows.
+_IRI = r"<[^<>\s]*>"
+_BN = r"_:[A-Za-z0-9][A-Za-z0-9._\-]*"
+#: one statement per line; every group carries its delimiters (module doc)
+LINE_RE = (
+    r"^\s*"
+    rf"(?:(?P<s_iri>{_IRI})|(?P<s_bn>{_BN}))"
+    r"\s+"
+    rf"(?P<p_iri>{_IRI})"
+    r"\s+"
+    rf"(?:(?P<o_iri>{_IRI})|(?P<o_bn>{_BN})|"
+    r'(?P<o_lit>"(?:[^"\\]|\\.)*")'
+    r"(?:(?P<o_lang>@[A-Za-z][A-Za-z0-9]*(?:-[A-Za-z0-9]+)*)"
+    rf"|(?P<o_dt>\^\^{_IRI}))?)"
+    r"\s*"
+    rf"(?:(?P<g_iri>{_IRI})|(?P<g_bn>{_BN}))?"
+    r"\s*\.\s*(?:#.*)?$"
+)
 
-    ``pdf`` needs columns content, file_sha256 (the sha256 is computed
-    JVM-side with ``F.sha2`` *before* the Python boundary so the per-row
-    invariant is anchored to Spark, not Python) and optionally ``lang``:
-    rows tagged turtle/ttl go through the Turtle tokenizer, rows tagged
-    rdfxml/rdf/xml through the RDF/XML parser, all others through the
-    vectorized N-Triples/N-Quads line parser (mirrors the reference's
-    per-extension Rio format choice, ParseIntoSOGTables.java:138-141).
-    """
+
+def _schema(decompose: bool) -> pa.Schema:
     cols = DECOMPOSED_COLUMNS if decompose else STATEMENT_COLUMNS
-    if len(pdf) == 0:
-        return pd.DataFrame({c: pd.Series(dtype=object) for c in cols})
-
-    if "lang" in pdf.columns:
-        is_ttl = pdf["lang"].isin(("turtle", "ttl"))
-        is_xml = pdf["lang"].isin(("rdfxml", "rdf", "xml", "rdf/xml"))
-        if is_ttl.any() or is_xml.any():
-            parts = []
-            if is_ttl.any():
-                parts.append(_parse_per_file_rows(pdf[is_ttl], default_graph, "turtle"))
-            if is_xml.any():
-                parts.append(_parse_per_file_rows(pdf[is_xml], default_graph, "rdfxml"))
-            rest = ~(is_ttl | is_xml)
-            if rest.any():
-                parts.append(_parse_nt_rows(pdf[rest], default_graph))
-            out = pd.concat(parts, ignore_index=True)
-            return _finish(out, decompose, cols)
-    out = _parse_nt_rows(pdf, default_graph)
-    return _finish(out, decompose, cols)
+    return pa.schema(
+        [(c, pa.int64() if c == "line_no" else pa.string()) for c in cols]
+    )
 
 
-def _finish(out: pd.DataFrame, decompose: bool, cols: list[str]) -> pd.DataFrame:
-    if decompose:
-        s_parts = uri_pandas.decompose_series(out["s_lex"].where(out["s_kind"] == "iri"))
-        o_parts = uri_pandas.decompose_series(out["o_lex"].where(out["o_kind"] == "iri"))
-        for k in uri_pandas.PART_KEYS:
-            out[f"s_{k}"] = s_parts[k]
-            out[f"o_{k}"] = o_parts[k]
-    return out[cols]
+def _present(g):
+    """Delimiter-carrying group -> boolean presence (empty = absent;
+    null struct rows stay null and propagate)."""
+    return pc.not_equal(g, "")
 
 
-def _parse_per_file_rows(pdf: pd.DataFrame, default_graph: str, syntax: str) -> pd.DataFrame:
-    """Context-sensitive syntaxes -> statement frame (per-file parsers:
-    sources/turtle tokenizer or sources/rdfxml ElementTree walker)."""
-    if syntax == "turtle":
-        from .turtle import parse_turtle as parse_fn
-    else:
-        from .rdfxml import parse_rdfxml as parse_fn
+def _opt(g, start: int, stop: int = _BIG):
+    """Delimiter-carrying group -> stripped value or null when absent."""
+    return pc.if_else(_present(g), pc.utf8_slice_codeunits(g, start, stop), _NULL_STR)
 
+
+def _unescape(col: pa.Array) -> pa.Array:
+    """Resolve escapes in the values holding a backslash (Python per
+    value; the rest of the column is untouched)."""
+    has = pc.fill_null(pc.match_substring(col, "\\"), False)
+    if not pc.any(has).as_py():
+        return col
+    vals = [unescape(v) for v in pc.filter(col, has).to_pylist()]
+    return pc.replace_with_mask(col, has, pa.array(vals, pa.string()))
+
+
+def parse_nt(content: pa.Array, sha: pa.Array, default_graph: str) -> dict[str, pa.Array]:
+    """N-Triples / N-Quads file contents -> lexical statement columns,
+    one row per non-blank, non-comment line."""
+    lines_list = pc.split_pattern(content, "\n")
+    file_idx = pc.list_parent_indices(lines_list)
+    lines = pc.list_flatten(lines_list)
+    counts = pc.list_value_length(lines_list).to_numpy(zero_copy_only=False)
+    starts = np.repeat(np.cumsum(counts) - counts, counts)
+    line_no = np.arange(len(starts), dtype=np.int64) - starts + 1
+
+    stripped = pc.utf8_trim_whitespace(lines)
+    keep = pc.and_(
+        pc.greater(pc.binary_length(stripped), 0),
+        pc.invert(pc.starts_with(stripped, "#")),
+    )
+    stripped = pc.filter(stripped, keep)
+    file_idx = pc.filter(file_idx, keep)
+    line_no = line_no[keep.to_numpy(zero_copy_only=False)]
+
+    g = pc.extract_regex(stripped, LINE_RE)
+    f = {n: pc.struct_field(g, n) for n in (
+        "s_iri", "s_bn", "p_iri", "o_iri", "o_bn", "o_lit", "o_lang", "o_dt",
+        "g_iri", "g_bn",
+    )}
+    # unescaping keeps each group's leading and closing delimiter (an
+    # escape starts with a backslash and ends before the delimiter), so
+    # the slices below still cut exactly the markers
+    for n in ("s_iri", "p_iri", "o_iri", "o_lit", "o_dt", "g_iri"):
+        f[n] = _unescape(f[n])
+
+    s_is_iri = _present(f["s_iri"])
+    o_is_iri = _present(f["o_iri"])
+    o_is_bn = _present(f["o_bn"])
+    lang_p = _present(f["o_lang"])
+    return {
+        "file_sha256": pc.take(sha, file_idx),
+        "line_no": pa.array(line_no, pa.int64()),
+        "s_kind": pc.if_else(s_is_iri, "iri", "bnode"),
+        "s_lex": pc.if_else(
+            s_is_iri,
+            pc.utf8_slice_codeunits(f["s_iri"], 1, -1),
+            pc.utf8_slice_codeunits(f["s_bn"], 2, _BIG),
+        ),
+        "p_iri": pc.utf8_slice_codeunits(f["p_iri"], 1, -1),
+        "o_kind": pc.if_else(
+            o_is_iri, "iri", pc.if_else(o_is_bn, "bnode", "literal")
+        ),
+        "o_lex": pc.if_else(
+            o_is_iri,
+            pc.utf8_slice_codeunits(f["o_iri"], 1, -1),
+            pc.if_else(
+                o_is_bn,
+                pc.utf8_slice_codeunits(f["o_bn"], 2, _BIG),
+                pc.utf8_slice_codeunits(f["o_lit"], 1, -1),
+            ),
+        ),
+        "o_lang": _opt(f["o_lang"], 1),
+        # plain literal (no lang, no ^^datatype) -> xsd:string
+        "o_datatype": pc.if_else(
+            pc.and_(pc.and_(pc.invert(o_is_iri), pc.invert(o_is_bn)), pc.invert(lang_p)),
+            pc.if_else(
+                _present(f["o_dt"]),
+                pc.utf8_slice_codeunits(f["o_dt"], 3, -1),
+                pa.scalar(XSD_STRING, pa.string()),
+            ),
+            _NULL_STR,
+        ),
+        # bnode graph labels keep their _: prefix as an opaque graph name
+        "g_iri": pc.if_else(
+            _present(f["g_iri"]),
+            pc.utf8_slice_codeunits(f["g_iri"], 1, -1),
+            pc.if_else(
+                _present(f["g_bn"]), f["g_bn"], pa.scalar(default_graph, pa.string())
+            ),
+        ),
+        "parse_error": pc.if_else(
+            pc.is_valid(g), _NULL_STR, pc.utf8_slice_codeunits(stripped, 0, 200)
+        ),
+    }
+
+
+def _parse_per_file(
+    content: pa.Array, sha: pa.Array, default_graph: str, parse_fn
+) -> dict[str, pa.Array]:
+    """Per-file parser (:func:`turtle.parse_turtle` or
+    :func:`rdfxml.parse_rdfxml`) -> lexical statement columns; its
+    errors become ``parse_error`` rows."""
     rows: list[tuple] = []
-    for sha, content in zip(pdf["file_sha256"], pdf["content"]):
-        stmts, errors = parse_fn(content, default_graph)
-        for ln, s_kind, s_lex, p_iri, o_kind, o_lex, o_lang, o_dt, g in stmts:
-            rows.append((sha, ln, s_kind, s_lex, p_iri, o_kind, o_lex, o_lang, o_dt, g, None))
-        for ln, msg in errors:
-            rows.append((sha, ln, None, None, None, None, None, None, None, None, msg[:200]))
-    return pd.DataFrame(rows, columns=STATEMENT_COLUMNS).astype(object)
+    for digest, text in zip(sha.to_pylist(), content.to_pylist()):
+        stmts, errors = parse_fn(text, default_graph)
+        rows.extend((digest, *st, None) for st in stmts)
+        rows.extend((digest, ln) + (None,) * 8 + (msg[:200],) for ln, msg in errors)
+    cols = list(zip(*rows)) if rows else [()] * len(STATEMENT_COLUMNS)
+    return {
+        c: pa.array(list(v), pa.int64() if c == "line_no" else pa.string())
+        for c, v in zip(STATEMENT_COLUMNS, cols)
+    }
 
 
-def _parse_nt_rows(pdf: pd.DataFrame, default_graph: str) -> pd.DataFrame:
-    """Vectorized N-Triples/N-Quads path (line-oriented pandas ops)."""
-    lines_per_file = pdf["content"].str.split("\n")
-    counts = lines_per_file.str.len().to_numpy()
-    file_idx = np.repeat(np.arange(len(pdf)), counts)
-    lines = pd.Series(np.concatenate(lines_per_file.to_numpy()), dtype=object)
-    line_no = pd.Series(
-        np.concatenate([np.arange(1, c + 1) for c in counts]), dtype="int64"
-    )
-
-    stripped = lines.str.strip()
-    keep = (stripped.str.len() > 0) & ~stripped.str.startswith("#")
-    stripped = stripped[keep]
-    line_no = line_no[keep]
-    file_idx = file_idx[keep.to_numpy()]
-    if len(stripped) == 0:
-        return pd.DataFrame({c: pd.Series(dtype=object) for c in STATEMENT_COLUMNS})
-
-    has_escapes = stripped.str.contains("\\", regex=False).any()
-    g = stripped.str.extract(LINE_RE)
-
-    out = pd.DataFrame(index=g.index)
-    # statement rows carry ONLY the content hash; repo/path/commit live in
-    # the per-file dictionary (E/files) — 3 fewer object columns per
-    # statement is a double-digit allocation cut at 32 parallel workers
-    out["file_sha256"] = pdf["file_sha256"].iloc[file_idx].to_numpy()
-    out["line_no"] = line_no.to_numpy()
-
-    if not has_escapes:
-        unescape = lambda col: col  # noqa: E731 — no backslash in batch
-    else:
-        unescape = _unescape
-
-    s_is_iri = g["s_iri"].notna()
-    o_is_iri = g["o_iri"].notna()
-    o_is_bn = g["o_bn"].notna()
-    matched = g["p_iri"].notna()
-
-    out["s_kind"] = np.where(s_is_iri, "iri", "bnode")
-    out["s_lex"] = unescape(g["s_iri"]).where(s_is_iri, g["s_bn"].str[2:])
-    out["p_iri"] = unescape(g["p_iri"])
-    out["o_kind"] = np.select(
-        [o_is_iri, o_is_bn], ["iri", "bnode"], default="literal"
-    )
-    out["o_lex"] = (
-        unescape(g["o_iri"])
-        .where(o_is_iri, g["o_bn"].str[2:])
-        .where(o_is_iri | o_is_bn, unescape(g["o_lit"]))
-    )
-    out["o_lang"] = g["o_lang"]
-    # plain literal (no lang, no ^^datatype) -> xsd:string
-    out["o_datatype"] = np.where(
-        (out["o_kind"] == "literal") & g["o_lang"].isna(),
-        unescape(g["o_dt"]).fillna(XSD_STRING),
-        None,
-    )
-    # bnode graph labels keep their _: prefix as an opaque graph name
-    out["g_iri"] = (
-        unescape(g["g_iri"]).where(g["g_iri"].notna(), g["g_bn"]).fillna(default_graph)
-    )
-    out["parse_error"] = None
-
-    bad = ~matched
-    if bad.any():
-        for c in ("s_kind", "s_lex", "p_iri", "o_kind", "o_lex", "o_lang", "o_datatype"):
-            out.loc[bad, c] = None
-        out.loc[bad, "g_iri"] = None
-        out.loc[bad, "parse_error"] = stripped[bad].str.slice(0, 200)
-    return out
+def _finish(parts: list[dict[str, pa.Array]], decompose: bool) -> pa.RecordBatch:
+    """Lexical statement columns of one or more producers -> one
+    RecordBatch; with ``decompose`` the subject's and object's IRI parts
+    are added (NULL for bnodes and literals)."""
+    cols = {c: pa.concat_arrays([p[c] for p in parts]) for c in STATEMENT_COLUMNS}
+    if decompose:
+        for role in ("s", "o"):
+            iri = pc.if_else(
+                pc.equal(cols[f"{role}_kind"], "iri"), cols[f"{role}_lex"], _NULL_STR
+            )
+            for k, v in decompose_arrow(iri).items():
+                cols[f"{role}_{k}"] = v
+    schema = _schema(decompose)
+    return pa.RecordBatch.from_arrays([cols[c] for c in schema.names], schema=schema)
 
 
-def parse_iterator(
-    batches: Iterator[pd.DataFrame], default_graph: str, decompose: bool = False
-) -> Iterator[pd.DataFrame]:
-    """Adapter for ``DataFrame.mapInPandas``."""
-    for pdf in batches:
-        yield parse_batch(pdf, default_graph, decompose)
+def parse_iterator_arrow(
+    batches: Iterator[pa.RecordBatch], default_graph: str, decompose: bool = False
+) -> Iterator[pa.RecordBatch]:
+    """Adapter for ``DataFrame.mapInArrow``: ``source_files`` batches
+    (content, file_sha256, optional lang) -> statement batches, one per
+    input batch, routed per file as the module doc describes."""
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        content = batch.column("content")
+        sha = batch.column("file_sha256")
+        if "lang" not in batch.schema.names:
+            yield _finish([parse_nt(content, sha, default_graph)], decompose)
+            continue
+        lang = batch.column("lang")
+        is_ttl = pc.fill_null(pc.is_in(lang, value_set=_TURTLE), False)
+        is_xml = pc.fill_null(pc.is_in(lang, value_set=_RDFXML), False)
+        is_nt = pc.invert(pc.or_(is_ttl, is_xml))
+        parts = []
+        if pc.any(is_nt).as_py():
+            parts.append(
+                parse_nt(pc.filter(content, is_nt), pc.filter(sha, is_nt), default_graph)
+            )
+        if pc.any(is_ttl).as_py():
+            ttl_content, ttl_sha = pc.filter(content, is_ttl), pc.filter(sha, is_ttl)
+            cols, ok = parse_turtle_arrow(ttl_content, ttl_sha, default_graph)
+            parts.append(cols)
+            slow = pc.invert(ok)
+            if pc.any(slow).as_py():
+                parts.append(_parse_per_file(
+                    pc.filter(ttl_content, slow), pc.filter(ttl_sha, slow),
+                    default_graph, parse_turtle,
+                ))
+        if pc.any(is_xml).as_py():
+            parts.append(_parse_per_file(
+                pc.filter(content, is_xml), pc.filter(sha, is_xml),
+                default_graph, parse_rdfxml,
+            ))
+        yield _finish(parts, decompose)

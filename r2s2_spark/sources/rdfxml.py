@@ -4,7 +4,7 @@ The reference parses RDF/XML via rdf4j Rio chosen by file extension
 (ParseIntoSOGTables.java:138-141,402-445); its own JUnit fixtures are
 built as RDF/XML models (LoadingTest.java:41-53). Here the `lang` column
 plays the extension's role: 'rdfxml'/'rdf'/'xml' rows dispatch to this
-parser from sources/ntriples.parse_batch.
+parser from sources/ntriples.parse_iterator_arrow.
 
 Implemented subset (the RDF/XML features that occur in real LOD dumps):
 - rdf:RDF root or a bare node element root,
@@ -22,7 +22,7 @@ Implemented subset (the RDF/XML features that occur in real LOD dumps):
 
 Per-file Python is acceptable here for the same reason as Turtle: XML is
 nested, not line-vectorizable; the loop lives inside the sanctioned
-mapInPandas batch (xml.etree is C-accelerated).
+mapInArrow batch (xml.etree is C-accelerated).
 """
 
 from __future__ import annotations

@@ -11,8 +11,8 @@ is byte-identical to the tokenizer by construction (asserted against it on
 fixture, adversarial and fuzz corpora in tests):
 
 File eligibility (any failure -> the file takes the slow path):
-- no backslash anywhere in the content (escape resolution is per-match
-  Python — the same policy as the NT fast path);
+- no backslash anywhere in the content (the tokenizer resolves escapes
+  in context: strings, IRIs, long strings);
 - every non-blank, non-comment line FULL-MATCHES either the ``@prefix``
   directive form or the simple-triple grammar below (so ``;``/``,``
   lists, ``[ ]``/``( )``, multiline strings, BASE/@base/PREFIX, RDF-star
@@ -20,6 +20,9 @@ File eligibility (any failure -> the file takes the slow path):
   error recovery then produces its exact statements/errors);
 - every directive line precedes every triple line (prefix state is then
   constant over all triples and can resolve vectorized);
+- no directive declares a prefix the tokenizer lexes as something else —
+  digit-leading (num) or 'true'/'false' + '.', '-' or ':' (boolean) —
+  even when no triple uses it (the tokenizer reports it as an error);
 - every pname's prefix resolves in the file's directive map.
 
 Line grammar (delimiter-carrying captures; RE2 has no backreferences and
@@ -41,6 +44,8 @@ tokenizes identically in the slow path.
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -51,16 +56,17 @@ _BIG = 2**30
 _NULL_STR = pa.scalar(None, pa.string())
 
 _IRI = r"<[^<>\"{}|^`\\\x00-\x20]*>"
-#: pname with a NON-DIGIT-first prefix: the tokenizer tries num BEFORE
-#: pname, so a digit-leading "123:x" lexes as num + ':x' (two tokens) —
-#: accepting it here as one pname would diverge; excluded from the fast
-#: grammar so such lines demote the file to the tokenizer. (A 'true:'/
-#: 'false:' prefix has the same preference problem and is rejected in
-#: the resolution pass.) Local part cannot END with '.' (statement dot).
-_PNAME = (
-    r"(?:[A-Za-z_][A-Za-z0-9_.\-]*)?:"
-    r"(?:[A-Za-z0-9_](?:[A-Za-z0-9_.\-]*[A-Za-z0-9_\-])?)?"
-)
+#: pname prefix with a NON-DIGIT first character: the tokenizer tries num
+#: BEFORE pname, so a digit-leading "123:x" lexes as num + ':x' (two
+#: tokens) — accepting it here as one pname would diverge; excluded from
+#: the fast grammar so such lines demote the file to the tokenizer.
+_PFX = r"(?:[A-Za-z_][A-Za-z0-9_.\-]*)?:"
+#: a prefix the tokenizer lexes as a boolean + ':local' ('true:', 'false.x:'
+#: — the bool token only refuses a following [A-Za-z0-9_]); such a prefix
+#: demotes its file whether it is declared or used
+_BOOL_PFX = r"(?:true|false)[.:\-]"
+#: local part cannot END with '.' (statement dot)
+_PNAME = _PFX + r"(?:[A-Za-z0-9_](?:[A-Za-z0-9_.\-]*[A-Za-z0-9_\-])?)?"
 _BNODE = r"_:[A-Za-z0-9][A-Za-z0-9._\-]*"
 _NUM = r"[+-]?(?:\d+\.\d*|\.\d+|\d+)(?:[eE][+-]?\d+)?"
 #: escape-free single-line string (the backslash prefilter guarantees it)
@@ -69,7 +75,7 @@ _STR = r'"[^"\n]*"'
 #: header directive: @prefix pn: <iri> .   (PREFIX/BASE/@base -> fallback)
 DIRECTIVE_RE = (
     r"^[ \t]*@prefix[ \t]+"
-    r"(?P<pfx>(?:[A-Za-z0-9_][A-Za-z0-9_.\-]*)?:)[ \t]*"
+    rf"(?P<pfx>{_PFX})[ \t]*"
     rf"(?P<ns>{_IRI})[ \t]*\.[ \t]*(?:#.*)?$"
 )
 
@@ -101,24 +107,14 @@ def _present(g):
     return pc.fill_null(pc.not_equal(g, ""), False)
 
 
-def turtle_fast_mask(content: pa.Array) -> pa.Array:
-    """Cheap pre-mask: files with a backslash can never take the fast
-    path (exact twin of the NT prefilter). Full eligibility is decided
-    line-by-line inside :func:`parse_turtle_arrow`."""
-    return pc.invert(pc.match_substring(content, "\\"))
+def parse_turtle_arrow(content: pa.Array, sha: pa.Array, default_graph: str):
+    """Vectorized parse attempt over Turtle files.
 
-
-def parse_turtle_arrow(
-    content: pa.Array, sha: pa.Array, default_graph: str, decompose: bool
-):
-    """Vectorized parse attempt over backslash-free Turtle files.
-
-    Returns ``(record_batch, ok_mask)``: the batch holds the statements of
-    every ELIGIBLE file (ok_mask True); ineligible files contribute no
-    rows and must be routed to the tokenizer by the caller.
+    Returns ``(columns, ok_mask)``: ``columns`` maps each lexical
+    statement column to an array holding the statements of every ELIGIBLE
+    file (ok_mask True); ineligible files contribute no rows and must be
+    routed to the tokenizer by the caller.
     """
-    from .ntriples_arrow import _schema, decompose_arrow
-
     n_files = len(content)
     lines_list = pc.split_pattern(content, "\n")
     file_idx_a = pc.list_parent_indices(lines_list)
@@ -139,9 +135,12 @@ def parse_turtle_arrow(
     t = pc.extract_regex(lines, TRIPLE_RE)
     is_tri = pc.is_valid(t).to_numpy(zero_copy_only=False)
 
-    # per-file eligibility: every line classifies, directives before triples
+    # per-file eligibility: no backslash, every line classifies,
+    # directives before triples
     bad_line = ~(blank_np | is_dir | is_tri)
-    ok = np.ones(n_files, dtype=bool)
+    ok = pc.fill_null(pc.invert(pc.match_substring(content, "\\")), True).to_numpy(
+        zero_copy_only=False
+    )
     if bad_line.any():
         np.logical_and.at(ok, file_idx[bad_line], False)
     # order: max(directive line index) < min(triple line index) per file
@@ -161,14 +160,13 @@ def parse_turtle_arrow(
         pfx_vals = pc.struct_field(d, "pfx").take(pa.array(dir_rows)).to_pylist()
         ns_vals = pc.struct_field(d, "ns").take(pa.array(dir_rows)).to_pylist()
         for r, pfx, ns in zip(dir_rows, pfx_vals, ns_vals):
+            if re.match(_BOOL_PFX, pfx):
+                ok[file_idx[r]] = False
             # no @base in eligible files and no escapes (prefilter), so
             # the tokenizer's resolve_iri/unescape are both identity here
             pmaps[int(file_idx[r])][pfx[:-1]] = ns[1:-1]
 
     tri_rows = np.nonzero(is_tri & ok[file_idx])[0]
-    if len(tri_rows) == 0:
-        empty = pa.RecordBatch.from_pylist([], schema=_schema(decompose))
-        return empty, pa.array(ok)
     take = pa.array(tri_rows)
     g = {
         name: pc.struct_field(t, name).take(take)
@@ -183,9 +181,8 @@ def parse_turtle_arrow(
 
     # pname resolution: dictionary-encode (file, pname) keys, resolve the
     # small dictionary in Python against the per-file maps, take back.
-    # An unresolved prefix — or a 'true'/'false' prefix, which the
-    # tokenizer would lex as a boolean + ':local' — marks the FILE
-    # ineligible (the tokenizer then produces its exact rows/errors).
+    # An unresolved prefix marks the FILE ineligible (the tokenizer then
+    # produces its exact rows/errors).
     bad_files: set[int] = set()
     # '"x"@prefix'/'"x"@base': the tokenizer lexes these as directive
     # tokens (alternation order), not language tags — demote such files
@@ -213,7 +210,7 @@ def parse_turtle_arrow(
             fi_s, _, pn = kv.partition("\x00")
             pfx, _, local = pn.partition(":")
             ns = pmaps[int(fi_s)].get(pfx)
-            if ns is None or pfx in ("true", "false"):
+            if ns is None:
                 bad_files.add(int(fi_s))
                 out_vals.append(None)
             else:
@@ -236,9 +233,6 @@ def parse_turtle_arrow(
         dt_pn_iri = pc.filter(dt_pn_iri, keep_a)
         tri_file = tri_file[keep]
         tri_line = tri_line[keep]
-        if len(tri_line) == 0:
-            empty = pa.RecordBatch.from_pylist([], schema=_schema(decompose))
-            return empty, pa.array(ok)
 
     s_is_iri = _present(g["s_iri"])
     s_is_pn = _present(g["s_pn"])
@@ -342,24 +336,4 @@ def parse_turtle_arrow(
         "g_iri": pa.array([default_graph] * len(tri_line), pa.string()),
         "parse_error": pa.nulls(len(tri_line), pa.string()),
     }
-    if decompose:
-        s_iri_only = pc.if_else(
-            pc.or_(s_is_iri, s_is_pn), out["s_lex"], _NULL_STR
-        )
-        o_iri_only = pc.if_else(
-            pc.or_(o_is_iri, o_is_pn), out["o_lex"], _NULL_STR
-        )
-        s_parts = decompose_arrow(s_iri_only)
-        o_parts = decompose_arrow(o_iri_only)
-        from ..functions.uri_pandas import PART_KEYS
-
-        for k in PART_KEYS:
-            out[f"s_{k}"] = s_parts[k]
-            out[f"o_{k}"] = o_parts[k]
-    schema = _schema(decompose)
-    batch = pa.RecordBatch.from_arrays(
-        [pa.array(out[c]) if isinstance(out[c], np.ndarray) else out[c]
-         for c in schema.names],
-        schema=schema,
-    )
-    return batch, pa.array(ok)
+    return out, pa.array(ok)

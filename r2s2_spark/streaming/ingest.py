@@ -5,7 +5,7 @@ surface); a continuously-arriving repository feed is the natural 100 TB
 deployment, so the engine exposes:
 
 - :func:`stream_extract` — the SAME vectorized Arrow parser running over a
-  streaming source_files frame (mapInPandas is streaming-capable);
+  streaming source_files frame (mapInArrow is streaming-capable);
 - :func:`start_incremental_ingest` — readStream -> extract -> foreachBatch
   appending routed statements into the vertical layout, checkpointed
   (exactly-once per micro-batch via the streaming checkpoint + one

@@ -1,14 +1,14 @@
 """Property-based round-trips for the parsers and the URI decomposition
-(hypothesis; pandas-only — no SparkSession, so these run in seconds)."""
+(hypothesis; Arrow-only — no SparkSession, so these run in seconds)."""
 
-import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from r2s2_spark.functions.uri_pandas import decompose_series
+from r2s2_spark.functions.uri import decompose_arrow
 from r2s2_spark.naming import XSD_STRING
 from r2s2_spark.operators.passes import _reassemble_py
-from r2s2_spark.sources.ntriples import parse_batch
+from r2s2_spark.sources.ntriples import parse_iterator_arrow
 from r2s2_spark.sources.turtle import parse_turtle
 
 # IRI-safe path/fragment characters (no escapes needed inside <...>)
@@ -33,15 +33,13 @@ def test_ntriples_literal_roundtrip(path, frag, lit):
     parse exactly (escape handling is the classic corruption source)."""
     s = f"http://h.example/{path}#{frag}"
     line = f'<{s}> <http://h.example/p> "{_nt_escape(lit)}" .'
-    pdf = pd.DataFrame(
-        {"repo": ["r"], "path": ["p"], "commit": ["c"],
-         "file_sha256": ["sha"], "content": [line]}
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([line]), pa.array(["sha"])], names=["content", "file_sha256"]
     )
-    out = parse_batch(pdf, "g")
-    assert out.parse_error.isna().all(), (line, out.parse_error.tolist())
-    row = out.iloc[0]
-    assert row.s_lex == s
-    assert row.o_lex == lit and row.o_datatype == XSD_STRING
+    (row,) = [r for rb in parse_iterator_arrow(iter([batch]), "g") for r in rb.to_pylist()]
+    assert row["parse_error"] is None, (line, row)
+    assert row["s_lex"] == s
+    assert row["o_lex"] == lit and row["o_datatype"] == XSD_STRING
 
 
 @settings(max_examples=60, deadline=None)
@@ -68,8 +66,7 @@ def test_uri_decompose_reassemble_identity(host, path, query, frag, scheme):
     """decompose -> reassemble is the identity on authority-form IRIs (the
     R2RML template inverse the whole vertical layout depends on)."""
     iri = f"{scheme}://{host}/{path}?{query}#{frag}"
-    parts_df = decompose_series(pd.Series([iri], dtype=object))
-    parts = {k: (None if pd.isna(v.iloc[0]) else v.iloc[0]) for k, v in parts_df.items()}
+    parts = {k: v[0].as_py() for k, v in decompose_arrow(pa.array([iri])).items()}
     assert _reassemble_py(parts) == iri, (iri, parts)
 
 

@@ -231,11 +231,10 @@ def test_reassemble_py_matches_catalyst(spark):
     divergence (e.g. truthiness vs isNotNull on an empty-but-present
     user_info/host) would let two distinct class IRIs collide into one
     table name."""
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import functions as F
 
-    from r2s2_spark.functions.uri import PART_KEYS, reassemble_iri
-    from r2s2_spark.functions.uri_pandas import decompose_series
+    from r2s2_spark.functions.uri import PART_KEYS, decompose_arrow, reassemble_iri
     from r2s2_spark.operators.passes import _reassemble_py
 
     iris = [
@@ -249,18 +248,11 @@ def test_reassemble_py_matches_catalyst(spark):
         "mailto:a@b.example",
         "http://u:pw@host:80/",
     ]
-    parts_pdf = decompose_series(pd.Series(iris, dtype=object))
-    py_out = [
-        _reassemble_py(
-            {
-                k: (None if pd.isna(parts_pdf[k].iloc[i]) else parts_pdf[k].iloc[i])
-                for k in PART_KEYS
-            }
-        )
-        for i in range(len(iris))
-    ]
+    rows = pa.table(decompose_arrow(pa.array(iris))).to_pylist()
+    py_out = [_reassemble_py(r) for r in rows]
     sdf = spark.createDataFrame(
-        parts_pdf[list(PART_KEYS)].astype(object).where(parts_pdf.notna(), None)
+        [tuple(r[k] for k in PART_KEYS) for r in rows],
+        ", ".join(f"{k} string" for k in PART_KEYS),
     )
     cat_out = [
         r.out

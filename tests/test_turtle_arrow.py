@@ -12,19 +12,27 @@ import pyarrow as pa
 import pytest
 
 from r2s2_spark.naming import EX, XSD
-from r2s2_spark.sources import ntriples
 from r2s2_spark.sources import turtle as T
-from r2s2_spark.sources.ntriples_arrow import _schema, parse_iterator_arrow
+from r2s2_spark.sources.ntriples import DECOMPOSED_COLUMNS, STATEMENT_COLUMNS, parse_iterator_arrow
 from r2s2_spark.sources.turtle_arrow import parse_turtle_arrow
 
 DG = "urn:x-default"
 
 
-def _fast(texts, decompose=False):
+def _fast(texts):
     content = pa.array(texts, pa.string())
     sha = pa.array([f"sha{i}" for i in range(len(texts))], pa.string())
-    rb, ok = parse_turtle_arrow(content, sha, DG, decompose)
-    return rb.to_pylist(), ok.to_pylist()
+    cols, ok = parse_turtle_arrow(content, sha, DG)
+    return pa.table(cols).to_pylist(), ok.to_pylist()
+
+
+def _batch(files):
+    return pa.RecordBatch.from_arrays(
+        [pa.array(files, pa.string()),
+         pa.array([f"s{i}" for i in range(len(files))], pa.string()),
+         pa.array(["turtle"] * len(files), pa.string())],
+        names=["content", "file_sha256", "lang"],
+    )
 
 
 ADVERSARIAL = [
@@ -59,11 +67,20 @@ ADVERSARIAL = [
     f'PREFIX ex: <{EX}>\nex:a ex:p ex:c .',                        # sparql-style
     f'@prefix ex: <{EX}> .\nex:a ex:p _:z. ',                      # dot-absorbing bnode
     f'@prefix ex: <{EX}> .\nex:a ex:p 5.',                         # dot-absorbing num
+    f'@prefix ex: <{EX}> .\nex:a ex:p "e\\tsc" .',                   # escape
 ]
 
+#: declared but never used: the tokenizer still reports 'bad @prefix'
+UNUSED_BAD_DIRECTIVES = [
+    f'@prefix ex: <{EX}> .\n@prefix 1x: <urn:q#> .\nex:a ex:p ex:c .',
+    f'@prefix ex: <{EX}> .\n@prefix true: <urn:t#> .\nex:a ex:p ex:c .',
+    f'@prefix false.x: <urn:f#> .\n@prefix ex: <{EX}> .\nex:a ex:p ex:c .',
+]
+ADVERSARIAL += UNUSED_BAD_DIRECTIVES
 
-def _assert_files_equal(cases, decompose=False):
-    rows, ok = _fast(cases, decompose)
+
+def _assert_files_equal(cases):
+    rows, ok = _fast(cases)
     by_sha = {}
     for r in rows:
         by_sha.setdefault(r["file_sha256"], []).append(r)
@@ -92,9 +109,46 @@ def test_adversarial_corpus():
     assert not any(ok[7:])
 
 
-def test_iterator_routes_fast_and_slow_identically():
+def test_unused_bad_directives_keep_tokenizer_errors():
+    """A digit-leading or boolean-leading @prefix demotes its file even
+    when the prefix is never used, so the tokenizer's error rows reach
+    the output instead of being dropped with the fast path's rows."""
+    rows = [r for rb in parse_iterator_arrow(iter([_batch(UNUSED_BAD_DIRECTIVES)]), DG)
+            for r in rb.to_pylist()]
+    for i, text in enumerate(UNUSED_BAD_DIRECTIVES):
+        _, errs = T.parse_turtle(text, DG)
+        got = [(r["line_no"], r["parse_error"]) for r in rows
+               if r["file_sha256"] == f"s{i}" and r["parse_error"]]
+        assert errs and sorted(got) == sorted(errs), (i, got, errs)
+
+
+def _reference_rows(files, parts=None):
+    """Per-file tokenizer rows (the iterator's column order); with
+    ``parts`` (IRI -> part dict) the decomposed columns are appended."""
+    out = []
+    for i, text in enumerate(files):
+        stmts, errs = T.parse_turtle(text, DG)
+        rows = [(f"s{i}", *st, None) for st in stmts]
+        rows += [(f"s{i}", ln) + (None,) * 8 + (msg[:200],) for ln, msg in errs]
+        for r in rows:
+            rec = dict(zip(STATEMENT_COLUMNS, r))
+            if parts is not None:
+                for role in ("s", "o"):
+                    iri = rec[f"{role}_lex"] if rec[f"{role}_kind"] == "iri" else None
+                    for k, v in parts.get(iri, {}).items():
+                        rec[f"{role}_{k}"] = v
+            out.append(rec)
+    return out
+
+
+def test_iterator_routes_fast_and_slow_identically(spark):
     """The mapInArrow iterator's union of fast + fallback rows equals the
-    pure pandas path row-for-row (order-insensitive) on a fuzz corpus."""
+    per-file tokenizer row-for-row (order-insensitive) on a fuzz corpus,
+    and its IRI parts equal the Catalyst decomposition."""
+    from pyspark.sql import functions as F
+
+    from r2s2_spark.functions.uri import PART_KEYS, decompose_iri
+
     random.seed(23)
     subj = ["ex:a", "<http://x/s>", "_:b1", "_:b.2", "a", "5", "ex:a:b", "_x:s"]
     pred = ["ex:p", "a", "<urn:p>", "ex:p.q", "rdf:type"]
@@ -103,7 +157,10 @@ def test_iterator_routes_fast_and_slow_identically():
            '[ ex:p "v" ]', '"""m"""', "'sq'", '"es\\tc"', "ex:", "_:z."]
     dirs = [f"@prefix ex: <{EX}> .", f"@prefix xsd: <{XSD}> .",
             "@prefix rdf: <http://www.w3.org/1999/02/22-rdf-syntax-ns#> .",
-            "@base <http://b/> .", "PREFIX q: <urn:q#>"]
+            "@base <http://b/> .", "PREFIX q: <urn:q#>",
+            # never used by a triple: must still demote the file
+            "@prefix 1x: <urn:q#> .", "@prefix true: <urn:t#> .",
+            "@prefix false-y: <urn:f#> ."]
     files = []
     for _ in range(250):
         header = random.sample(dirs, random.randrange(0, 4))
@@ -122,22 +179,25 @@ def test_iterator_routes_fast_and_slow_identically():
                     f"{random.choice(obj)} ."
                 )
         files.append("\n".join(header + body))
-    batch = pa.RecordBatch.from_arrays(
-        [pa.array(files, pa.string()),
-         pa.array([f"s{i}" for i in range(len(files))], pa.string()),
-         pa.array(["turtle"] * len(files), pa.string())],
-        names=["content", "file_sha256", "lang"],
-    )
-    for decompose in (False, True):
+    batch = _batch(files)
+
+    iris = sorted({
+        r[f"{role}_lex"] for r in _reference_rows(files) for role in ("s", "o")
+        if r[f"{role}_kind"] == "iri"
+    })
+    parts_col = decompose_iri(F.col("iri"))
+    parts = {
+        r["iri"]: {k: r[k] for k in PART_KEYS}
+        for r in spark.createDataFrame([(i,) for i in iris], "iri string")
+        .select("iri", *[parts_col[k].alias(k) for k in PART_KEYS]).collect()
+    }
+    for decompose, cols in ((False, STATEMENT_COLUMNS), (True, DECOMPOSED_COLUMNS)):
         fast_rows = []
         for rb in parse_iterator_arrow(iter([batch]), DG, decompose):
             fast_rows.extend(rb.to_pylist())
-        ref = ntriples.parse_batch(batch.to_pandas(), DG, decompose)
-        cols = _schema(decompose).names
+        ref = _reference_rows(files, parts if decompose else None)
 
         def key(r):
-            return tuple(str(r[c]) for c in cols)
+            return tuple(str(r.get(c)) for c in cols)
 
-        assert sorted(map(key, fast_rows)) == sorted(
-            map(key, ref.to_dict("records"))
-        )
+        assert sorted(map(key, fast_rows)) == sorted(map(key, ref))
