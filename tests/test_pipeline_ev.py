@@ -9,9 +9,11 @@ from r2s2_spark.pipeline import KgPipeline
 from r2s2_spark.sources import fixtures as fx
 
 
-@pytest.fixture()
-def loaded(spark, tmp_path):
-    pipe = KgPipeline(spark, str(tmp_path / "wd"))
+@pytest.fixture(scope="module")
+def loaded(spark, tmp_path_factory):
+    """The loading fixture's KG, loaded once: the tests using it only
+    read it (the resume test re-runs the load, which must skip)."""
+    pipe = KgPipeline(spark, str(tmp_path_factory.mktemp("ev") / "wd"))
     pipe.load(fx.fixture_loading(spark))
     return pipe
 

@@ -5,6 +5,8 @@ the loader), so updates are an engine-native extension: each operation
 commits a ``U{k}`` snapshot stage whose catalog references unchanged
 tables in place and rewrites only what the operation touched."""
 
+import shutil
+
 import pytest
 
 from r2s2_spark.naming import EX, XSD
@@ -14,16 +16,38 @@ from r2s2_spark.plans.sparql_update import parse_update
 from r2s2_spark.sources import fixtures as fx
 
 
-def _kg(spark, tmp_path, wd="wd"):
+#: per-module directory of the template KGs (see _loaded)
+_TEMPLATES: dict = {}
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _template_dir(tmp_path_factory):
+    _TEMPLATES["dir"] = tmp_path_factory.mktemp("kg_templates")
+
+
+def _loaded(spark, tmp_path, wd, name, lines, fresh=False):
+    """A KG over ``lines`` in ``tmp_path / wd``. Unless ``fresh``, the
+    E->M load runs once per module into a template work dir, and each
+    call copies that dir and resumes it (every load stage is already
+    committed, so ``load`` only finds the manifests). Catalog paths are
+    relative to the work dir, so the copy is an independent KG."""
+    src = fx.source_files_df(spark, [fx._row("r", "m.nq", "\n".join(lines))])
+    if not fresh:
+        template = _TEMPLATES["dir"] / name
+        if not template.exists():
+            KgPipeline(spark, str(template)).load(src)
+        shutil.copytree(template, tmp_path / wd)
+    return KgPipeline(spark, str(tmp_path / wd)).load(src)
+
+
+def _kg(spark, tmp_path, wd="wd", fresh=False):
     lines = [
         f'<{EX}s1> <{EX}name> "anna" .',
         f'<{EX}s1> <{EX}age> "7"^^<{XSD}integer> .',
         f'<{EX}s2> <{EX}name> "bob" .',
         f'<{EX}s2> <{EX}in> <{EX}g1> <{EX}graph1> .',
     ]
-    pipe = KgPipeline(spark, str(tmp_path / wd))
-    pipe.load(fx.source_files_df(spark, [fx._row("r", "m.nq", "\n".join(lines))]))
-    return pipe
+    return _loaded(spark, tmp_path, wd, "kg", lines, fresh)
 
 
 def _quads(pipe):
@@ -233,9 +257,7 @@ def _graph_kg(spark, tmp_path, wd="wdg"):
         f'<{EX}u1> <{EX}in> <{EX}g1> <{EX}graph1> .',
         f'<{EX}u2> <{EX}in> <{EX}g2> <{EX}graph2> .',
     ]
-    pipe = KgPipeline(spark, str(tmp_path / wd))
-    pipe.load(fx.source_files_df(spark, [fx._row("r", "m.nq", "\n".join(lines))]))
-    return pipe
+    return _loaded(spark, tmp_path, wd, "graph_kg", lines)
 
 
 def _tables_by_pred(cat):
@@ -687,7 +709,7 @@ def test_insert_template_bnode_retry_deterministic(spark, tmp_path):
     operation writes the same bytes."""
     quads = []
     for wd in ("wda", "wdb"):
-        pipe = _kg(spark, tmp_path, wd)
+        pipe = _kg(spark, tmp_path, wd, fresh=True)
         pipe.update(
             f"INSERT {{ ?s <{EX}note> _:n }} WHERE {{ ?s <{EX}name> ?v }}"
         )

@@ -106,13 +106,19 @@ def test_sessionize_stateful(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    # availableNow + ProcessingTimeTimeout keeps the query alive waiting
-    # for state timeouts after the data is exhausted; poll for quiescence
-    # then stop (event-closed sessions are all emitted in the data batches)
-    for _ in range(60):
-        time.sleep(2)
-        if q.status["isDataAvailable"] is False and not q.status["isTriggerActive"]:
+    # availableNow + ProcessingTimeTimeout never quiesces: the timeout
+    # keeps no-data batches running after the data is exhausted. The
+    # first no-data batch (start offset == end offset) comes after every
+    # data batch has committed, and event-closed sessions are all emitted
+    # in the data batches; stop there
+    def drained():
+        src = (q.lastProgress or {"sources": [{}]})["sources"][0]
+        return src.get("startOffset") is not None and src["startOffset"] == src["endOffset"]
+
+    for _ in range(240):
+        if drained():
             break
+        time.sleep(0.5)
     q.stop()
     got = spark.sql("select * from sess_t").collect()
     # closed sessions only (state holds the trailing open session per user);
