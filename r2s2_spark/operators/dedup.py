@@ -485,17 +485,6 @@ def simhash_fingerprints(docs: DataFrame, id_col: str = "doc_id", text_col: str 
     return bits.select(F.col(id_col), hashing.simhash_from_bits().alias("simhash"))
 
 
-def simhash_duplicate_groups(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Documents sharing an identical SimHash (hamming-0 groups; wider
-    hamming radii block on bitstring halves — same join shape)."""
-    fps = simhash_fingerprints(docs, id_col, text_col)
-    return (
-        fps.groupBy("simhash")
-        .agg(F.count(F.lit(1)).alias("n"), F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .where(F.col("n") > 1)
-    )
-
-
 def embedding_candidate_pairs(
     emb: DataFrame,
     id_col: str = "vec_id",

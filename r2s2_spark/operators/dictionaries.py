@@ -93,11 +93,3 @@ def encode_with_dictionary(
     )
     return df.join(dim, on=col, how="left")
 
-
-def decode_with_dictionary(
-    df: DataFrame, dictionary: DataFrame, id_col: str, value_alias: str
-) -> DataFrame:
-    dim = F.broadcast(
-        dictionary.select(F.col("id").alias(id_col), F.col("iri").alias(value_alias))
-    )
-    return df.join(dim, on=id_col, how="left")

@@ -667,9 +667,9 @@ def optimize_table(
     schemes: DataFrame | None = None,
     hosts: DataFrame | None = None,
     mode: str = "full",
-    cleanup: list | None = None,
     small_dicts: frozenset = frozenset(),
-    stats: dict | None = None,
+    *,
+    stats: dict,
 ) -> DataFrame:
     """Apply passes 2-5 to one table. Mutates ``table``'s column specs
     (virtual values, narrowed types, LCP prefixes, encodings, graph
@@ -679,19 +679,12 @@ def optimize_table(
     24-46): virtual columns + LCP only — no narrowing, no dict encode, no
     set-semantics collapse.
 
-    ``cleanup``: if given, frames persisted internally are appended to it;
-    the caller MUST unpersist them after materializing the result (at
-    thousands of tables the collapse caches otherwise accumulate
-    unboundedly across the stage-O loop). If None, nothing is persisted —
-    correct but recomputes the collapse groupBy once for the probe.
-
-    ``stats``: precomputed probe results (fused_probe_tables) — when given,
-    no probe job runs at all; with the fused ``__max_graphs`` key present
-    the collapse probe is skipped too, leaving the write as this table's
-    only job.
+    ``stats``: precomputed probe results in ``probe_table``'s key format
+    (fused_probe_tables for stage O, fused_reopt_probe for stage M) — no
+    probe job runs here; with the fused ``__max_graphs`` key present the
+    collapse probe is skipped too, leaving the write as this table's only
+    job.
     """
-    if stats is None:
-        stats = probe_table(df, table, mode)
     n = stats["__n"]
 
     specs = [cs for cs in table.all_column_specs()]
@@ -781,7 +774,7 @@ def optimize_table(
                 out = _encode(out, hosts, cs, "hosts", small_dicts)
 
     # --- pass 5: set semantics + graph collapse ---------------------------
-    out = _collapse(out, table, stats, n, cleanup)
+    out = _collapse(out, table, stats, n)
     return out
 
 
@@ -810,9 +803,7 @@ def _encode(
     return df
 
 
-def _collapse(
-    df: DataFrame, table: TableSpec, stats: dict, n: int, cleanup: list | None = None
-) -> DataFrame:
+def _collapse(df: DataFrame, table: TableSpec, stats: dict, n: int) -> DataFrame:
     """ReintroduceRdfSetSemantics: dedupe + multi-graph collapse + cluster
     sort. Works on the post-rewrite frame."""
     g_specs = [pm.graph_column for pm in table.predicates if pm.graph_column is not None]
@@ -833,12 +824,8 @@ def _collapse(
     # skipped shuffle would have applied — without it each table keeps
     # one file per salted V input split and downstream stages pay the
     # per-file open cost T*salt times.
-    if (
-        stats is not None
-        and stats.get("__groups") == n
-        and (stats.get("__max_graphs") or 0) <= 1
-    ):
-        tp = (stats or {}).get("__target_partitions")
+    if stats.get("__groups") == n and (stats.get("__max_graphs") or 0) <= 1:
+        tp = stats.get("__target_partitions")
         if tp:
             df = df.coalesce(int(tp))
         return df.sortWithinPartitions(*df.columns) if df.columns else df
@@ -852,13 +839,8 @@ def _collapse(
         # fused probe already measured max graphs per group (valid post-
         # rewrite: injective rewrites keep group boundaries) -> no probe
         # job, no cache needed
-        max_graphs = (stats or {}).get("__max_graphs")
+        max_graphs = stats.get("__max_graphs")
         if max_graphs is None:
-            if cleanup is not None:
-                # cache spans the max-graphs probe AND the caller's write;
-                # the caller unpersists after materializing
-                collapsed = collapsed.persist()
-                cleanup.append(collapsed)
             max_graphs = collapsed.agg(F.max(F.size(F.col(g.name)))).first()[0]
         if max_graphs is not None and max_graphs > 1:
             g.part = "graph_set"

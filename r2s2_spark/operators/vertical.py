@@ -212,57 +212,3 @@ def rename_generic(df: DataFrame, table: TableSpec, with_sha: bool = False) -> D
 def read_table(spark: SparkSession, data_path: str, table: TableSpec, with_sha: bool = False) -> DataFrame:
     """Read one vertical table and rename generic -> reference columns."""
     return rename_generic(spark.read.parquet(f"{data_path}/t={table.name}"), table, with_sha)
-
-
-def read_stored(spark: SparkSession, root: str, table: TableSpec) -> DataFrame:
-    """Read an optimized table from its catalog ``path``. Tables written
-    inside a BATCHED generic-schema write (stage O/M small-table fusion)
-    store positional column names c0..cN; ``storage_columns`` maps them
-    back to the real names. Individually-written tables read as-is."""
-    import os
-
-    df = spark.read.parquet(os.path.join(root, table.path))
-    if table.storage_columns:
-        df = df.select(
-            *[
-                F.col(f"c{i}").alias(name)
-                for i, name in enumerate(table.storage_columns)
-            ]
-        )
-    return df
-
-
-def read_stored_frames(
-    spark: SparkSession, root: str, tables: list[TableSpec], pooled_map=None
-) -> dict[str, DataFrame]:
-    """Read MANY stored tables with sub-linear driver work: every
-    spark.read.parquet submits a 1-task footer/schema-inference job, so a
-    per-table loop costs one driver job per table (the stage-M read cost
-    at 10^4-10^5 tables). Batched tables share a batch root — ONE read
-    per batch, each member derived by partition-pruned ``t =`` filter +
-    rename. Individually-stored tables still read one by one (optionally
-    through ``pooled_map`` to overlap the footer reads)."""
-    import os
-
-    out: dict[str, DataFrame] = {}
-    by_batch: dict[str, list[TableSpec]] = {}
-    plain: list[TableSpec] = []
-    for t in tables:
-        if t.storage_columns and t.path and "/t=" in t.path:
-            by_batch.setdefault(t.path.rsplit("/t=", 1)[0], []).append(t)
-        else:
-            plain.append(t)
-    for batch_root in sorted(by_batch):
-        base = spark.read.parquet(os.path.join(root, batch_root))
-        for t in by_batch[batch_root]:
-            out[t.name] = base.where(F.col("t") == t.name).select(
-                *[
-                    F.col(f"c{i}").alias(name)
-                    for i, name in enumerate(t.storage_columns)
-                ]
-            )
-    mapper = pooled_map or (lambda fn, items: [fn(x) for x in items])
-    out.update(
-        dict(mapper(lambda t: (t.name, read_stored(spark, root, t)), plain))
-    )
-    return out

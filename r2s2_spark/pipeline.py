@@ -42,26 +42,23 @@ KNOWN_STAGES = frozenset({"E", "D", "V", "O", "M", "R", "L", "C"})
 #: bound on concurrent per-table Spark jobs from driver-side loops. Each
 #: job is small; the pool keeps the scheduler fed without flooding it
 #: (10^5 simultaneous job submissions would thrash the DAG scheduler).
-MAX_CONCURRENT_TABLE_JOBS = int(os.environ.get("R2S2_TABLE_JOB_POOL", "8"))
+MAX_CONCURRENT_TABLE_JOBS = 8
 
 #: measured-size ceiling for broadcasting an UNBOUNDED dictionary (hosts)
 #: into per-table encode joins. Parquet bytes on disk, so ~3-5x that in
 #: memory — 64 MiB keeps the executor-side hash relation comfortably under
 #: typical 4-8 GiB executor heaps while covering every realistic hosts
 #: dict short of a full web crawl.
-BROADCAST_DICT_MAX_BYTES = int(
-    os.environ.get("R2S2_BROADCAST_DICT_MAX_BYTES", str(64 * 1024 * 1024))
-)
+BROADCAST_DICT_MAX_BYTES = 64 * 1024 * 1024
 
-#: stage O/M write fusion: tables at or below this row count are written
-#: in shared generic-schema partitionBy("t") batches instead of one Spark
-#: job each. At a real-KG vocabulary (10^4-10^5 predicate tables, one per
+#: stage O/M/U write fusion: tables at or below this row count share
+#: generic-schema partitionBy("t") batch writes instead of one Spark job
+#: each. At a real-KG vocabulary (10^4-10^5 predicate tables, one per
 #: predicate/kind/lang/datatype) the long tail is tiny tables whose
 #: per-table job submission latency — not their data — dominates the
-#: stage; batching makes driver job count sub-linear in table count.
-SMALL_TABLE_MAX_ROWS = int(
-    os.environ.get("R2S2_SMALL_TABLE_MAX_ROWS", "1000000")
-)
+#: stage; batching makes driver job count sub-linear in table count. A
+#: larger table gets a batch of its own (its data is the cost).
+SMALL_TABLE_MAX_ROWS = 1_000_000
 #: bounds on one batch job, so a single batch never degenerates into a
 #: monster union plan (analyzer cost) or an oversized shuffle
 BATCH_MAX_TABLES = 1024
@@ -107,25 +104,37 @@ def _write_batched(
     rel_dir: str,
     pool: str | None = None,
 ) -> dict[str, int]:
-    """Write many SMALL tables in a handful of Spark jobs instead of one
-    per table: tables are grouped by physical schema SHAPE (positional
-    Spark types), renamed to generic c0..cN columns, balanced-tree
-    unioned, and written as ONE partitionBy("t") job per group chunk —
-    so stage O/M driver job count is sub-linear in table count (the last
-    linear-in-vocabulary driver cost at 10^4-10^5 predicate tables).
+    """Write every stage-O/M/U table as a member of a batch root, in a
+    handful of Spark jobs instead of one per table: tables are grouped by
+    physical schema SHAPE (positional Spark types), renamed to generic
+    c0..cN columns, balanced-tree unioned, and written as ONE
+    partitionBy("t") job per group chunk — so driver job count is
+    sub-linear in table count (the last linear-in-vocabulary driver cost
+    at 10^4-10^5 predicate tables).
 
     Each member TableSpec gets ``path = {rel_dir}/{gid}/t={name}`` and
     ``storage_columns`` = its real column names in storage order
-    (vertical.read_stored renames back on read). NO shuffle is added:
+    (``KgPipeline.reader`` renames back on read). NO shuffle is added:
     every union branch is ONE table (t constant per input partition,
     already size-coalesced and clustering-sorted by optimize_table), so
     the partitionBy("t") write routes each task's rows to its own
     partition dir as-is — batching only fuses the JOB SUBMISSIONS, it
     must not re-shuffle data the identity fast path deliberately avoided
-    shuffling. Returns {name: row_count} (missing = zero rows; an empty
-    table writes no partition dir)."""
+    shuffling.
+
+    A table above SMALL_TABLE_MAX_ROWS gets a chunk of its own. A
+    one-table chunk is written with a plain parquet write straight into
+    ``{gid}/t={name}`` — the layout partitionBy would produce, so readers
+    cannot tell — because partitionBy's planned write costs a lone
+    multi-million-row table 8-16% over a plain write. Returns
+    {name: row_count} (missing = zero rows; an empty table in a shared
+    chunk writes no partition dir)."""
     groups: dict[tuple, list] = {}
+    jobs: list[tuple[int, list]] = []
     for t, out in pairs:
+        if (t.row_count or 0) > SMALL_TABLE_MAX_ROWS:
+            jobs.append((len(jobs), [(t, out)]))
+            continue
         key = tuple(f.dataType.simpleString() for f in out.schema.fields)
         groups.setdefault(key, []).append((t, out))
     # chunk size balances two costs: fewer chunks = fewer driver jobs
@@ -138,8 +147,6 @@ def _write_batched(
         BATCH_MAX_TABLES,
         max(8, -(-len(pairs) // (2 * MAX_CONCURRENT_TABLE_JOBS))),
     )
-    jobs: list[tuple[int, list]] = []
-    gid = 0
     for key in sorted(groups, key=str):
         chunk: list = []
         chunk_rows = 0
@@ -147,12 +154,10 @@ def _write_batched(
             chunk.append((t, out))
             chunk_rows += t.row_count or 0
             if len(chunk) >= chunk_max or chunk_rows >= BATCH_MAX_ROWS:
-                jobs.append((gid, chunk))
-                gid += 1
+                jobs.append((len(jobs), chunk))
                 chunk, chunk_rows = [], 0
         if chunk:
-            jobs.append((gid, chunk))
-            gid += 1
+            jobs.append((len(jobs), chunk))
 
     def write_one(job: tuple[int, list]) -> dict[str, int]:
         g, chunk = job
@@ -165,20 +170,28 @@ def _write_batched(
             t.storage_columns = names
             t.path = f"{rel_dir}/{g}/t={t.name}"
             branch = out.select(
-                F.lit(t.name).alias("t"),
-                *[F.col(c).alias(f"c{i}") for i, c in enumerate(names)],
+                *[F.col(c).alias(f"c{i}") for i, c in enumerate(names)]
             )
+            if len(chunk) > 1:
+                branch = branch.select(F.lit(t.name).alias("t"), "*")
             # per-BRANCH row-count metric: each branch is exactly one
             # table, so a plain count per branch rides the write — no
             # read-back scan, no per-row conditionals
             ob = Observation()
             obs.append((t.name, ob))
             parts.append(branch.observe(ob, F.count(F.lit(1)).alias("n")))
-        # balanced-tree union via the one shared helper (branches share
-        # the generic (t, c0..cN) schema, so by-name == positional)
-        u = balanced_union(parts)
         dest = os.path.join(abs_dir, str(g))
-        u.write.mode("overwrite").partitionBy("t").parquet(dest)
+        if len(parts) == 1:
+            parts[0].write.mode("overwrite").parquet(
+                os.path.join(dest, f"t={chunk[0][0].name}")
+            )
+        else:
+            # balanced-tree union via the one shared helper (branches
+            # share the generic (t, c0..cN) schema, so by-name ==
+            # positional)
+            balanced_union(parts).write.mode("overwrite").partitionBy(
+                "t"
+            ).parquet(dest)
         return {name: int(ob.get["n"]) for name, ob in obs}
 
     counts: dict[str, int] = {}
@@ -506,38 +519,11 @@ class KgPipeline:
                     small_dicts=small_dicts, stats=stats_all[t.name],
                 )
 
-            # big tables keep one dedicated write job each (their data, not
-            # job latency, is the cost); the small-table long tail — at a
-            # real KG vocabulary, almost all of the 10^4-10^5 tables —
-            # fuses into a handful of batched partitionBy("t") writes, so
-            # stage job count is sub-linear in table count. Pool threads
-            # keep the scheduler fed for the big writes (FAIR, session.py).
-            big = [
-                t for t in catalog.tables
-                if (t.row_count or 0) > SMALL_TABLE_MAX_ROWS
-            ]
-            small = [
-                t for t in catalog.tables
-                if (t.row_count or 0) <= SMALL_TABLE_MAX_ROWS
-            ]
-
-            def write_big(t):
-                self.spark.sparkContext.setLocalProperty(
-                    "spark.scheduler.pool", "stage_o"
-                )
-                out = optimize_frame(t)
-                obs = Observation()
-                out = out.observe(obs, F.count(F.lit(1)).alias("n"))
-                out.write.mode("overwrite").parquet(io.path("O", "tables", t.name))
-                t.path = f"O/tables/{t.name}"
-                t.storage_columns = None
-                return t.name, int(obs.get["n"])
-
             # warm the schema cache serially (one footer-inference job per
-            # distinct source layout), then build the small frames on the
-            # POOL — plan construction is eager-analysis py4j work (~50 ms
-            # per table, 3.5 s serial at 64 tables) and the Java calls
-            # release the GIL, so threads overlap it
+            # distinct source layout), then build the frames on the POOL —
+            # plan construction is eager-analysis py4j work (~50 ms per
+            # table, 3.5 s serial at 64 tables) and the Java calls release
+            # the GIL, so threads overlap it
             seen_parents = set()
             for t in catalog.tables:
                 src_dir = split_paths.get(t.name, f"{v_data}/t={t.name}")
@@ -545,16 +531,12 @@ class KgPipeline:
                 if parent not in seen_parents:
                     seen_parents.add(parent)
                     read_src(src_dir)
-            small_pairs = _pooled_map(lambda t: (t, optimize_frame(t)), small)
-            table_counts = dict(_pooled_map(write_big, big))
-            table_counts.update(
-                _write_batched(
-                    self.spark,
-                    small_pairs,
-                    io.path("O", "batch"),
-                    "O/batch",
-                    pool="stage_o",
-                )
+            table_counts = _write_batched(
+                self.spark,
+                _pooled_map(lambda t: (t, optimize_frame(t)), catalog.tables),
+                io.path("O", "batch"),
+                "O/batch",
+                pool="stage_o",
             )
             for t in catalog.tables:
                 t.row_count = table_counts.get(t.name, 0)
@@ -584,13 +566,10 @@ class KgPipeline:
 
         def fn(io: StageIO) -> dict:
             catalog = io.read_catalog("O")
-            # spark.read.parquet is a driver-side footer/schema read per
-            # table — serial it costs ~90ms x T (5.8 s measured at 64
-            # tables, minutes at 10^4); the bounded pool overlaps them
+            # batch members share ONE read per batch root (reader())
             t0 = time.time()
-            frames = vertical.read_stored_frames(
-                self.spark, io.root, catalog.tables, pooled_map=_pooled_map
-            )
+            read = self.reader("O")
+            frames = {t.name: read(t) for t in catalog.tables}
             TIMINGS["M.read"] = round(time.time() - t0, 3)
             sizes = {t.name: t.row_count or 0 for t in catalog.tables}
             # stage O already computed every repeating-subject flag
@@ -610,37 +589,14 @@ class KgPipeline:
                 TIMINGS[f"M.merge.{k}"] = v
             t0 = time.time()
 
-            # changed tables re-optimize + rewrite — big ones as dedicated
-            # jobs, the small long tail batched (same fusion as stage O)
-            to_write = [t for t in catalog.tables if t.name in changed]
-            big = [
-                t for t in to_write if (t.row_count or 0) > SMALL_TABLE_MAX_ROWS
-            ]
-            small = [
-                t for t in to_write if (t.row_count or 0) <= SMALL_TABLE_MAX_ROWS
-            ]
-
-            def reopt_one(t):
-                self.spark.sparkContext.setLocalProperty(
-                    "spark.scheduler.pool", "stage_m"
-                )
-                out = passes.optimize_table(self.spark, frames[t.name], t, mode="reopt")
-                obs = Observation()
-                out = out.observe(obs, F.count(F.lit(1)).alias("n"))
-                out.write.mode("overwrite").parquet(io.path("M", "tables", t.name))
-                t.path = f"M/tables/{t.name}"
-                t.storage_columns = None
-                t.row_count = int(obs.get["n"])
-
-            _pooled_map(reopt_one, big)
-
-            # small tables: ONE fused reopt probe job per schema shape
+            # changed tables: ONE fused reopt probe job per schema shape
             # (count/min/max for every table at once — no per-table agg
             # jobs), then ALL writes fuse into batched jobs: stage M's
             # job count is sub-linear in table count end to end
+            to_write = [t for t in catalog.tables if t.name in changed]
             reopt_stats = passes.fused_reopt_probe(
                 self.spark,
-                [(t, frames[t.name]) for t in small],
+                [(t, frames[t.name]) for t in to_write],
                 pooled_map=_pooled_map,
             )
 
@@ -658,12 +614,12 @@ class KgPipeline:
 
             m_counts = _write_batched(
                 self.spark,
-                _pooled_map(reopt_frame, small),
+                _pooled_map(reopt_frame, to_write),
                 io.path("M", "batch"),
                 "M/batch",
                 pool="stage_m",
             )
-            for t in small:
+            for t in to_write:
                 t.row_count = m_counts.get(t.name, 0)
             TIMINGS["M.reopt"] = round(time.time() - t0, 3)
             t0 = time.time()
@@ -745,11 +701,13 @@ class KgPipeline:
           cost; Iceberg calls this rewrite_data_files).
         - EXPIRY (opt-in): uncommitted stage leftovers are removed, and
           with ``expire_superseded=True`` data superseded by the current
-          catalog (V/data and O/tables dirs no longer referenced once M is
-          committed) is deleted — manifests, catalogs and lineage stay
+          catalog (V/data and O/batch members no longer referenced once M
+          is committed) is deleted — manifests, catalogs and lineage stay
           (Iceberg expire_snapshots keeps metadata too).
         """
         import math
+        import re
+        import shutil as sh
 
         self._batch_reads.clear()  # compaction rewrites table dirs
         stage = self.last_catalog_stage()
@@ -769,7 +727,7 @@ class KgPipeline:
 
         def compact_one(t):
             self.spark.sparkContext.setLocalProperty("spark.scheduler.pool", "vacuum")
-            d = os.path.join(self.io.root, t.path or f"{stage}/tables/{t.name}")
+            d = os.path.join(self.io.root, t.path)
             base0 = os.path.dirname(d)
             # crash recovery (ADVICE r5): a crash between rename(d->trash)
             # and rename(tmp->d) leaves the live dir MISSING with the full
@@ -793,8 +751,6 @@ class KgPipeline:
             base = os.path.dirname(d)
             tmp = os.path.join(base, f".{os.path.basename(d)}.vacuum")
             trash = os.path.join(base, f".{os.path.basename(d)}.trash")
-            import shutil as sh
-
             for leftover in (tmp, trash):  # idempotent retry
                 if os.path.exists(leftover):
                     sh.rmtree(leftover)
@@ -810,7 +766,10 @@ class KgPipeline:
             sh.rmtree(trash)
             return n_files, dir_stats(d)[0]
 
-        for before, after in _pooled_map(compact_one, catalog.tables):
+        # V tables share the one V/data partitioning; only stored (batch
+        # member) tables are compacted
+        stored = [] if stage == "V" else catalog.tables
+        for before, after in _pooled_map(compact_one, stored):
             if before:
                 stats["tables_compacted"] += 1
                 stats["files_before"] += before
@@ -820,88 +779,58 @@ class KgPipeline:
         # ONLY known stage names are swept: a directory the user (or a
         # concurrent writer) placed in the work dir is not ours to delete
         # (ADVICE r2 — the previous sweep rmtree'd every non-committed dir).
-        import shutil as sh
-
-        import re as _re_u
-
         for entry in os.listdir(self.io.root):
             d = os.path.join(self.io.root, entry)
             if (
-                (entry in KNOWN_STAGES or _re_u.fullmatch(r"U\d+", entry))
+                (entry in KNOWN_STAGES or re.fullmatch(r"U\d+", entry))
                 and os.path.isdir(d)
                 and not self.io.is_committed(entry)
             ):
                 sh.rmtree(d)
                 stats["orphans_removed"] += 1
 
+        # superseded-data expiry is path-based: a t= member of a batch
+        # root that the CURRENT catalog does not reference is dead
+        live = {t.path for t in catalog.tables}
+
+        def sweep_batch_root(stage_name: str, sub: str) -> None:
+            root_dir = self.io.path(stage_name, sub)
+            if not os.path.isdir(root_dir):
+                return
+            for g in os.listdir(root_dir):
+                gdir = os.path.join(root_dir, g)
+                if not os.path.isdir(gdir):
+                    continue
+                for part in os.listdir(gdir):
+                    if (
+                        part.startswith("t=")
+                        and f"{stage_name}/{sub}/{g}/{part}" not in live
+                    ):
+                        sh.rmtree(os.path.join(gdir, part))
+                        stats["superseded_removed"] += 1
+
         if expire_superseded and stage.startswith("U"):
             # update-chain expiry: table dirs of OLDER update snapshots
             # (and of M) that the CURRENT catalog no longer references —
             # rebuilt/delta tables superseded by newer updates. Catalogs,
             # manifests and dictionaries stay (metadata, like Iceberg
-            # expire_snapshots); M's own sweep below also runs since the
-            # live set is path-based.
-            import re as _re
-
-            live_u = {t.path for t in catalog.tables}
-
-            def sweep_batch_root(stage_name: str, sub: str) -> None:
-                root_dir = self.io.path(stage_name, sub)
-                if not os.path.isdir(root_dir):
-                    return
-                for g in os.listdir(root_dir):
-                    gdir = os.path.join(root_dir, g)
-                    if not os.path.isdir(gdir):
-                        continue
-                    for part in os.listdir(gdir):
-                        if (
-                            part.startswith("t=")
-                            and f"{stage_name}/{sub}/{g}/{part}" not in live_u
-                        ):
-                            sh.rmtree(os.path.join(gdir, part))
-                            stats["superseded_removed"] += 1
-
+            # expire_snapshots); the O sweep below also runs.
             for entry in sorted(os.listdir(self.io.root)):
                 if entry == stage or not self.io.is_committed(entry):
                     continue
-                if _re.fullmatch(r"U\d+", entry):
+                if re.fullmatch(r"U\d+", entry):
                     sweep_batch_root(entry, "tables")
             sweep_batch_root("M", "batch")
-            m_tables = self.io.path("M", "tables")
-            if os.path.isdir(m_tables):
-                for name in os.listdir(m_tables):
-                    if f"M/tables/{name}" not in live_u:
-                        sh.rmtree(os.path.join(m_tables, name))
-                        stats["superseded_removed"] += 1
 
         if expire_superseded and (
             stage == "M"
             or (stage.startswith("U") and self.io.is_committed("M"))
         ):
-            live = {t.path for t in catalog.tables}
             v_data = self.io.path("V", "data")
             if os.path.exists(v_data):
                 sh.rmtree(v_data)
                 stats["superseded_removed"] += 1
-            o_tables = self.io.path("O", "tables")
-            if os.path.isdir(o_tables):
-                for name in os.listdir(o_tables):
-                    if f"O/tables/{name}" not in live:
-                        sh.rmtree(os.path.join(o_tables, name))
-                        stats["superseded_removed"] += 1
-            o_batch = self.io.path("O", "batch")
-            if os.path.isdir(o_batch):
-                for g in os.listdir(o_batch):
-                    gdir = os.path.join(o_batch, g)
-                    if not os.path.isdir(gdir):
-                        continue
-                    for sub in os.listdir(gdir):
-                        if (
-                            sub.startswith("t=")
-                            and f"O/batch/{g}/{sub}" not in live
-                        ):
-                            sh.rmtree(os.path.join(gdir, sub))
-                            stats["superseded_removed"] += 1
+            sweep_batch_root("O", "batch")
             split = self.io.path("O", "split")
             if os.path.exists(split):
                 sh.rmtree(split)
@@ -998,22 +927,15 @@ class KgPipeline:
                 return base
 
             def read(t: TableSpec) -> DataFrame:
-                if t.path is None:
-                    return self.spark.read.parquet(
-                        os.path.join(self.io.root, f"{stage}/tables/{t.name}")
-                    )
-                if t.storage_columns and "/t=" in t.path:
-                    # batched small table: partition-pruned filter +
-                    # rename on the shared batch-root read — the same
-                    # frame read_stored would produce
-                    base = batch_raw(t.path.rsplit("/t=", 1)[0])
-                    return base.where(F.col("t") == t.name).select(
-                        *[
-                            F.col(f"c{i}").alias(name)
-                            for i, name in enumerate(t.storage_columns)
-                        ]
-                    )
-                return vertical.read_stored(self.spark, self.io.root, t)
+                # batch member: partition-pruned filter + rename on the
+                # shared batch-root read
+                base = batch_raw(t.path.rsplit("/t=", 1)[0])
+                return base.where(F.col("t") == t.name).select(
+                    *[
+                        F.col(f"c{i}").alias(name)
+                        for i, name in enumerate(t.storage_columns)
+                    ]
+                )
 
             # fused multi-table scans (plans.sparql._fused_scan) need the
             # RAW batch frame; expose it as a reader attribute so callers

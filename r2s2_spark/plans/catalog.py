@@ -85,11 +85,11 @@ class TableSpec:
     #: stored table, same collision tolerance as the M probe (hash-merge
     #: can only flag repeating, never falsely unique).
     subject_repeating: bool | None = None
-    #: set when the table's parquet files live inside a BATCHED
-    #: generic-schema write (stage O/M small-table fusion): the files
-    #: store positional names c0..cN and this list holds the REAL column
-    #: names in storage position order, so readers rename c{i} ->
-    #: storage_columns[i]. None = files carry the real names directly.
+    #: the REAL column names in storage position order: every stage-O/M/U
+    #: table is a ``t=`` member of a batch root whose files store
+    #: positional names c0..cN, so readers rename c{i} ->
+    #: storage_columns[i]. None only for V-stage tables (generic V/data
+    #: columns, renamed by vertical.rename_generic).
     storage_columns: list[str] | None = None
 
     def physical_columns(self) -> list[str]:

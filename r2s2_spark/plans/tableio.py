@@ -165,11 +165,8 @@ class StageIO:
         df: DataFrame,
         name: str = "data",
         partition_by: list[str] | None = None,
-        sort_within: list[str] | None = None,
     ) -> str:
         target = self.path(stage, name)
-        if sort_within:
-            df = df.sortWithinPartitions(*sort_within)
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)

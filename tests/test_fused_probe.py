@@ -104,8 +104,7 @@ def test_subject_repeating_fold_matches_direct_probe(spark, tmp_path):
     probe over the stored frames — including NULL subject parts (partial
     fragments => NULL concat keys grouping as ONE A2 group) and
     unique-subject tables."""
-    from r2s2_spark.operators import merging, vertical
-    from r2s2_spark.pipeline import _pooled_map
+    from r2s2_spark.operators import merging
 
     rows = [
         (
@@ -127,9 +126,8 @@ def test_subject_repeating_fold_matches_direct_probe(spark, tmp_path):
     pipe.stage_v()
     pipe.stage_o()
     catalog = pipe.io.read_catalog("O")
-    frames = vertical.read_stored_frames(
-        spark, pipe.io.root, catalog.tables, pooled_map=_pooled_map
-    )
+    read = pipe.reader("O")
+    frames = {t.name: read(t) for t in catalog.tables}
     seen = set()
     for t in catalog.tables:
         assert t.subject_repeating is not None, t.name

@@ -232,7 +232,6 @@ def test_stage_o_batched_writes_sublinear_jobs(spark, tmp_path):
     tripling the table count must add far less than 1 job per added
     table."""
     from r2s2_spark.naming import EX
-    from r2s2_spark.operators import vertical
 
     # the status store's jobsList is bounded by spark.ui.retainedJobs and
     # evicts mid-suite (shared session, >1000 prior jobs), corrupting
@@ -274,12 +273,52 @@ def test_stage_o_batched_writes_sublinear_jobs(spark, tmp_path):
     for t in batched:
         assert t.path.startswith("O/batch/") and t.row_count == 5
     one = batched[0]
-    df = vertical.read_stored(spark, pipe.io.root, one)
+    df = pipe.reader("O")(one)
     assert df.columns == one.physical_columns()
     assert df.count() == 5
     # reconstruction reads through the batched layout transparently
     trips = pipe.triples("O")
     assert trips.count() == 48 * 5
+
+
+def test_single_stored_layout(spark, tmp_path, monkeypatch):
+    """Every stage-O/M table is a batch-root member written by
+    _write_batched, whatever its size: a table above SMALL_TABLE_MAX_ROWS
+    is the only t= member of its batch dir, no per-table tables/ dir is
+    written, and the KG reconstructs exactly before and after vacuum
+    expiry."""
+    import os
+    import re
+
+    from r2s2_spark import pipeline
+
+    thr = 2  # type_rdf_Alt and the boolean labels (3 rows each) exceed it
+    monkeypatch.setattr(pipeline, "SMALL_TABLE_MAX_ROWS", thr)
+    pipe = KgPipeline(spark, str(tmp_path / "wd"))
+    pipe.load(fx.fixture_loading(spark))
+
+    # stage O batches by its input rows, which its collapse can only
+    # shrink; stage M by the stage-O count of the table
+    o_rows = {t.name: t.row_count for t in pipe.catalog("O").tables}
+    big = set()
+    for stage in ("O", "M"):
+        for t in pipe.catalog(stage).tables:
+            assert t.storage_columns, (stage, t.name)
+            m = re.fullmatch(rf"([OM])/batch/\d+/t={t.name}", t.path)
+            assert m and (stage == "M" or m.group(1) == "O"), (stage, t.path)
+            if o_rows[t.name] > thr:
+                big.add(t.path)
+    assert any(p.startswith("M/") for p in big) and len(big) >= 3
+    for path in big:
+        batch_dir = os.path.dirname(os.path.join(pipe.io.root, path))
+        members = [d for d in os.listdir(batch_dir) if d.startswith("t=")]
+        assert members == [os.path.basename(path)], (path, members)
+    for stage in ("O", "M"):
+        assert not os.path.exists(pipe.io.path(stage, "tables"))
+
+    assert reconstructed_set(pipe) == expected_triples_loading()
+    pipe.vacuum(expire_superseded=True)
+    assert reconstructed_set(pipe) == expected_triples_loading()
 
 
 def test_fused_reopt_probe_matches_per_table(spark, tmp_path):
@@ -288,7 +327,7 @@ def test_fused_reopt_probe_matches_per_table(spark, tmp_path):
     key-for-key for every table — mixed shapes: plain literals, IRI
     objects (9-part decompose), narrowed ints."""
     from r2s2_spark.naming import EX
-    from r2s2_spark.operators import passes, vertical
+    from r2s2_spark.operators import passes
 
     xsd_int = "http://www.w3.org/2001/XMLSchema#integer"
     rows = []
@@ -304,7 +343,8 @@ def test_fused_reopt_probe_matches_per_table(spark, tmp_path):
     pipe.stage_v()
     pipe.stage_o()
     cat = pipe.catalog("O")
-    frames = vertical.read_stored_frames(spark, pipe.io.root, cat.tables)
+    read = pipe.reader("O")
+    frames = {t.name: read(t) for t in cat.tables}
     pairs = [(t, frames[t.name]) for t in cat.tables]
     fused = passes.fused_reopt_probe(spark, pairs)
     assert len(fused) == len(cat.tables) >= 3
