@@ -149,14 +149,14 @@ def hyperplane_bucket(vec: Column, planes: list[list[float]]) -> Column:
 
 
 def hyperplane_buckets_pandas(df, vec_col: str, bands_planes: list[list[list[float]]], id_col: str):
-    """Arrow fast path: ALL bands' buckets in one numpy matmul per batch
-    -> (id, band_no, bkt) rows. The Catalyst fold (:func:`hyperplane_bucket`)
-    evaluates n_bands*n_bits separate aggregate expressions per row — fine
-    at fixture scale and exactly order-reproducible in SQL (the oracle
-    twin), but at 100 TB the single (dim x total_bits) matmul is the path:
-    one Python boundary, BLAS inside. Signs agree with the fold except on
+    """ALL bands' buckets in one numpy matmul per Arrow batch -> one
+    (id, bkt0, ..., bkt{n_bands-1}) row per vector. The Catalyst fold
+    (:func:`hyperplane_bucket`) evaluates n_bands*n_bits separate aggregate
+    expressions per row — exactly order-reproducible in SQL (the oracle
+    twin), but the single (dim x total_bits) matmul is the scale path: one
+    Python boundary, BLAS inside. Signs agree with the fold except on
     |dot| within float rounding of zero (never observed; asserted against
-    the Catalyst path in tests)."""
+    the Catalyst fold in tests)."""
     import numpy as np
     import pandas as pd
 
@@ -165,18 +165,15 @@ def hyperplane_buckets_pandas(df, vec_col: str, bands_planes: list[list[list[flo
     def it(batches):
         for pdf in batches:
             vecs = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)  # (n, dim)
-            ids = pdf[id_col]
+            out = {id_col: pdf[id_col]}
             for band_no, m in enumerate(mats):
                 bits = vecs @ m >= 0  # (n, n_bits)
-                bkt = ["".join("1" if b else "0" for b in row) for row in bits]
-                yield pd.DataFrame(
-                    {"band_no": band_no, "bkt": bkt, id_col: ids}
-                )
+                out[f"bkt{band_no}"] = ["".join("1" if b else "0" for b in row) for row in bits]
+            yield pd.DataFrame(out)
 
     id_type = dict(df.dtypes)[id_col]
-    return df.select(id_col, vec_col).mapInPandas(
-        it, schema=f"band_no int, bkt string, {id_col} {id_type}"
-    )
+    bkts = ", ".join(f"bkt{i} string" for i in range(len(mats)))
+    return df.select(id_col, vec_col).mapInPandas(it, schema=f"{id_col} {id_type}, {bkts}")
 
 
 def hyperplane_bucket_sql(planes: list[list[float]], vec_expr: str = "embedding") -> str:

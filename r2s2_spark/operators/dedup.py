@@ -492,7 +492,6 @@ def embedding_candidate_pairs(
     n_bits: int = 8,
     n_bands: int = 4,
     dim: int | None = None,
-    use_arrow: bool = False,
 ) -> DataFrame:
     """Banded random-hyperplane LSH candidate pairs over an embedding
     column — the same blocking shape as :func:`lsh_candidate_pairs`:
@@ -503,32 +502,19 @@ def embedding_candidate_pairs(
     is O(n^2 / 256) per band — scale-safe, unlike a leading-dimension sign
     bucket whose 16 cells put n/16 vectors in each.
 
-    ``use_arrow``: compute all buckets in one numpy matmul per Arrow batch
-    (the 100 TB path — one Python boundary, BLAS inside) instead of the
-    Catalyst fold (the SQL-oracle-exact twin; n_bands*n_bits aggregate
-    expressions per row). Both produce identical buckets (asserted in
-    tests); keep Catalyst wherever a DuckDB oracle must replay the plan."""
+    All bands' buckets come from one numpy matmul per Arrow batch
+    (:func:`hashing.hyperplane_buckets_pandas`: one Python boundary, BLAS
+    inside), bucket-identical to the Catalyst fold the DuckDB oracles
+    replay (:func:`hashing.hyperplane_bucket`, asserted in tests) and
+    faster than it."""
     if dim is None:
         dim = emb.select(F.size(F.col(vec_col))).first()[0]
     bands_planes = [
         hashing.rademacher_planes(n_bits, dim, band=band) for band in range(n_bands)
     ]
-    if use_arrow:
-        exploded = hashing.hyperplane_buckets_pandas(emb, vec_col, bands_planes, id_col)
-        wide = exploded.groupBy(id_col).agg(
-            *[
-                F.max(F.when(F.col("band_no") == i, F.col("bkt"))).alias(f"__bk{i}")
-                for i in range(n_bands)
-            ]
-        )
-    else:
-        wide = emb.select(
-            F.col(id_col),
-            *[
-                hashing.hyperplane_bucket(F.col(vec_col), planes).alias(f"__bk{i}")
-                for i, planes in enumerate(bands_planes)
-            ],
-        )
+    wide = hashing.hyperplane_buckets_pandas(
+        emb, vec_col, bands_planes, id_col
+    ).toDF(id_col, *[f"__bk{i}" for i in range(n_bands)])
     # one row per (vec, band), every band's bucket carried alongside so
     # cross-band duplicate pairs die to a FIRST-SHARED-BAND join filter
     # instead of a distinct() exchange over the whole pair set (same
@@ -582,15 +568,12 @@ def embedding_near_duplicates(
     n_bits: int = 8,
     n_bands: int = 4,
     dim: int | None = None,
-    use_arrow: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-duplicates: banded hyperplane-LSH candidates
     (never all-pairs) scored by exact cosine >= threshold. Pairs carry ids
     only through the blocking join; vectors are joined back once for
     scoring (no vector duplication across bands)."""
-    pairs = embedding_candidate_pairs(
-        emb, id_col, vec_col, n_bits, n_bands, dim, use_arrow
-    )
+    pairs = embedding_candidate_pairs(emb, id_col, vec_col, n_bits, n_bands, dim)
     # norms are projected once per VECTOR below the join; the per-pair
     # work is then a single dot fold. Expression is dot / (na * nb) —
     # the exact association of hashing.cosine_similarity, bit-identical

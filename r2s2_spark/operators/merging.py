@@ -49,7 +49,7 @@ def subject_key(table: TableSpec) -> "F.Column":
 
     Keys are built from FULL lexical part values: a column's factored-out
     ``lcp_prefix`` (F3 substring strip) is prepended, exactly as
-    reconstruction does (r2rml.py table_triples). Comparing stripped
+    reconstruction does (r2rml.py ``_lexical``). Comparing stripped
     values cross-merged tables whose subjects share suffixes under
     different prefixes — e.g. .../nation/0 vs .../region/0 both stripped
     to '0' — silently attaching one entity's statements to another."""

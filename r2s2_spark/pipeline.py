@@ -341,28 +341,15 @@ class KgPipeline:
             # target keys were discovered inside stage D's single fused
             # scan (vocabulary-sized parquet); re-deriving them here would
             # be one more full pass over a 100 TB E
-            tk = os.path.join(io.path("D", "target_keys"))
-            key_rows: dict[tuple, int] = {}
-            if os.path.exists(tk):
-                rows = self.spark.read.parquet(tk).collect()
-                keys = sorted(
-                    [
-                        (r.p_iri, r.s_kind, r.o_kind, r.o_lang, r.o_datatype)
-                        for r in rows
-                    ],
-                    key=lambda k: tuple("" if x is None else x for x in k),
-                )
-                # per-key statement counts (absent on resumed pre-count
-                # work dirs): size each table's write salt from its
-                # measured row count instead of a fixed files-per-table
-                key_rows = {
-                    (r.p_iri, r.s_kind, r.o_kind, r.o_lang, r.o_datatype):
-                        int(r["n_rows"])
-                    for r in rows
-                    if "n_rows" in r.__fields__ and r["n_rows"] is not None
-                }
-            else:  # pre-fusion work dir resumed mid-pipeline
-                keys = vertical.discover_target_keys(stmts)
+            # per-key statement counts size each table's write salt from
+            # its measured row count instead of a fixed files-per-table
+            key_rows = {
+                (r.p_iri, r.s_kind, r.o_kind, r.o_lang, r.o_datatype): int(r.n_rows)
+                for r in self.spark.read.parquet(io.path("D", "target_keys")).collect()
+            }
+            keys = sorted(
+                key_rows, key=lambda k: tuple("" if x is None else x for x in k)
+            )
             catalog = vertical.build_catalog(keys, self.namespaces, self.default_graph)
             catalog.dictionaries = {"predicates": "D/predicates", "graphs": "D/graphs"}
             table_rows = {
@@ -374,12 +361,7 @@ class KgPipeline:
                     )
                 ]
                 for t in catalog.tables
-                if (
-                    t.predicates[0].predicate, t.subject_kind,
-                    t.predicates[0].obj_kind, t.predicates[0].lang,
-                    t.predicates[0].datatype,
-                ) in key_rows
-            } if key_rows else None
+            }
             routed = vertical.route_statements(
                 self.spark, stmts, catalog, self.graphs(),
                 table_rows=table_rows,
@@ -937,7 +919,7 @@ class KgPipeline:
                     ]
                 )
 
-            # fused multi-table scans (plans.sparql._fused_scan) need the
+            # fused multi-table scans (plans.r2rml._fused_scan) need the
             # RAW batch frame; expose it as a reader attribute so callers
             # without a pipeline keep working (getattr default None)
             read.batch_raw = batch_raw

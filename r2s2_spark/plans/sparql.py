@@ -50,15 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
-from .r2rml import (
-    _decode_encoded,
-    _flex_term_exprs,
-    _merged_presence_filter,
-    _term_exprs,
-    balanced_union as _balanced_union,
-    reconstruct_triples,
-    virtual_graph_id,
-)
+from .r2rml import reconstruct_triples
 
 
 class SparqlCompileError(Exception):
@@ -239,30 +231,21 @@ def _graph_terms(
     """All RDF terms appearing as subject or object of ANY triple in the
     active graph, as zero-length pairs ``(__n, __n)[, __gid]`` — the
     SPARQL §9.3 ZeroLengthPath node set for a both-variable ``p*``/``p?``
-    endpoint pair. ONE scan over every predicate map (mirrors the
-    variable-predicate branch of ``_pattern_frame``, endpoints only — no
-    term metadata, no predicate column) + one distinct; the scan is the
-    spec's own cost and is paid only on both-variable zero-length paths.
+    endpoint pair. ONE scan over every predicate map (the scanner
+    behind every pattern, :func:`reconstruct_triples`, endpoints and
+    graph id projected out, the rest column-pruned by Catalyst) + one
+    distinct; the scan is the spec's own cost and is paid only on
+    both-variable zero-length paths. It inherits the scanner's
+    structure-bounded branch count (stacked scans per merged table, fused
+    scans across batched single-map tables).
 
     ``g_col="__giri"`` decodes the per-graph key to the graph IRI after
     the distinct (compound-path closures group on the decoded IRI), with
     ``named`` (FROM NAMED) applied at the decode — the ``__gid`` form
-    leaves the named narrowing to the caller's decode join.
-
-    Derived from :func:`reconstruct_triples` (endpoints + graph id
-    projected out, the rest column-pruned by Catalyst), so the scan
-    inherits its structure-bounded branch count — one stacked scan per
-    merged table, fused scans across batched single-map tables — instead
-    of one branch per predicate map."""
-    if not catalog.tables:
-        from pyspark.sql import SparkSession
-
-        schema = "__s string, __o string" + (
-            ", __gid bigint" if g_is_var and g_col == "__gid" else
-            ", __giri string" if g_is_var else ""
-        )
-        return SparkSession.getActiveSession().createDataFrame([], schema)
-    tri = reconstruct_triples(catalog, reader, dicts)
+    leaves the named narrowing to the caller's decode join."""
+    tri = reconstruct_triples(
+        catalog, reader, dicts, graph_needed=graph is not None
+    )
     sel = [F.col("s").alias("__s"), F.col("o_lex").alias("__o")]
     if graph is not None:
         sel.append(F.col("g_id").alias("__gid"))
@@ -376,135 +359,6 @@ META_PREFIXES = (META_LANG, META_DT, META_KIND)
 _RDF_LANGSTRING = "http://www.w3.org/1999/02/22-rdf-syntax-ns#langString"
 _XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
 
-# A table whose >= _STACK_MIN predicate maps match one pattern scans ONCE
-# (array-of-structs + explode) instead of once per map; tests monkeypatch
-# this high to force the per-map path for result-parity comparison.
-_STACK_MIN = 2
-
-
-def _sorted_parts(specs):
-    return sorted(specs, key=lambda c: c.part)
-
-
-def _fuse_sig(t, pm, graph_needed: bool):
-    """Structural signature of one (table, predicate-map) pair: two pairs
-    with EQUAL signatures compile to identical Spark expressions over the
-    shared batched storage schema, so one fused branch can serve both —
-    only their constants (predicate IRI, virtual values, LCP prefixes,
-    virtual graph id) differ, and those join in per table. Returns None
-    when the pair cannot fuse (not batch-stored, or a physical column is
-    missing from the storage layout).
-
-    Why this matters at scale: a variable-predicate SPARQL pattern over a
-    real KG vocabulary (10^4-10^5 predicate tables, one per
-    predicate/kind/lang/datatype — cf. ParseIntoSOGTables.java:286-307
-    creating tables on-miss) would otherwise build one union branch per
-    table: one footer-read job plus ~100 ms of eager driver analysis
-    EACH, i.e. tens of minutes of driver work before the query runs.
-    Fused, the branch count is the number of distinct STRUCTURES (a
-    handful), independent of vocabulary size."""
-    if not (t.storage_columns and t.path and "/t=" in t.path):
-        return None
-
-    def spec_sig(cs):
-        pos = t.storage_columns.index(cs.name) if cs.physical else None
-        return (cs.part, cs.sql_type, cs.physical, cs.encoding,
-                bool(cs.lcp_prefix), pos)
-
-    try:
-        subj = tuple(spec_sig(cs) for cs in _sorted_parts(t.subject_columns))
-        obj = tuple(spec_sig(cs) for cs in _sorted_parts(pm.columns))
-        gc = pm.graph_column
-        if not graph_needed:
-            gsig = None
-        elif gc is None:
-            gsig = ("none",)
-        elif not gc.physical:
-            gsig = ("virtual",)
-        else:
-            gsig = ("phys", gc.part, gc.sql_type,
-                    t.storage_columns.index(gc.name))
-    except ValueError:
-        return None
-    root = t.path.rsplit("/t=", 1)[0]
-    return (root, t.subject_kind, pm.obj_kind, pm.merged, subj, obj, gsig)
-
-
-def _fused_scan(raw, members, dicts, graph_needed: bool):
-    """ONE scan frame for many structurally-identical (table, pm) pairs
-    living in the same batch root: partition-pruned ``t IN (...)`` filter,
-    broadcast join of a per-table constants frame, shared decode joins and
-    term expressions over the positional c0..cN storage columns. Returns
-    (df, subj_specs, pm_clone, t0, pm0) with df holding __s/__o lexical
-    exprs NOT yet selected — the caller builds the final projection (it
-    owns term-metadata and graph columns)."""
-    from dataclasses import replace
-
-    t0, pm0 = members[0]
-    spark = raw.sparkSession
-
-    def clone(cs):
-        if cs is None or not cs.physical:
-            return cs
-        return replace(cs, name=f"c{t0.storage_columns.index(cs.name)}")
-
-    subj = [clone(cs) for cs in _sorted_parts(t0.subject_columns)]
-    objc = [clone(cs) for cs in _sorted_parts(pm0.columns)]
-    pm2 = replace(pm0, columns=objc, graph_column=clone(pm0.graph_column))
-
-    # constant slots aligned with the sorted spec order (the signature
-    # guarantees every member has the same physical/lcp pattern)
-    slot_names: list[tuple[str | None, str | None]] = []
-    for i, cs in enumerate((*subj, *objc)):
-        slot_names.append((
-            None if cs.physical else f"__v{i}",
-            f"__l{i}" if cs.lcp_prefix else None,
-        ))
-    gc = pm2.graph_column
-    g_virtual = graph_needed and gc is not None and not gc.physical
-
-    fields = ["t string", "__p string"]
-    for v, lc in slot_names:
-        if v:
-            fields.append(f"{v} string")
-        if lc:
-            fields.append(f"{lc} string")
-    if g_virtual:
-        fields.append("__gv bigint")
-    rows = []
-    for t, pm in members:
-        row: list = [t.name, pm.predicate]
-        for cs in (*_sorted_parts(t.subject_columns), *_sorted_parts(pm.columns)):
-            if not cs.physical:
-                row.append(cs.virtual_value)
-            if cs.lcp_prefix:
-                row.append(cs.lcp_prefix)
-        if g_virtual:
-            row.append(virtual_graph_id(pm.graph_column))
-        rows.append(tuple(row))
-    consts = spark.createDataFrame(rows, ", ".join(fields))
-
-    df = raw.where(F.col("t").isin([t.name for t, _ in members]))
-    df = df.join(F.broadcast(consts), "t")
-    if dicts:
-        df = _decode_encoded(df, [*subj, *objc], dicts)
-    df = _merged_presence_filter(df, pm2)
-
-    slot_by_id = {id(cs): nm for cs, nm in zip((*subj, *objc), slot_names)}
-
-    def cols(cs):
-        v, lc = slot_by_id[id(cs)]
-        return (
-            F.col(cs.name) if cs.physical else None,
-            F.col(v) if v else None,
-            F.col(lc) if lc else None,
-        )
-
-    s_lex, _, _ = _flex_term_exprs(subj, t0.subject_kind, cols)
-    o_lex, o_lang, o_dt = _flex_term_exprs(objc, pm0.obj_kind, cols)
-    return df, (s_lex, o_lex, o_lang, o_dt), pm2, t0, pm0
-
-
 def _pattern_frame(
     catalog, reader, dicts, pattern, idx: int, graph=None,
     term_meta: frozenset = frozenset(), named=None,
@@ -598,237 +452,52 @@ def _pattern_frame(
         if g_is_var:
             sel.append(F.col(inner_graph[1:]).alias("__giri"))
         df = inner.select(*sel)
-    def finish_piece(df, s_lex, o_lex, o_lang, o_dt, subject_kind, obj_kind,
-                     p_col, g_col, explode_graphs):
-        """Shared tail of one scan branch (per-table or fused): the
-        standard (__s, __p, __o, __ol, __od [, meta] [, __gid]) projection
-        plus the non-null endpoint filter."""
-        sel = [
-            s_lex.alias("__s"),
-            p_col.alias("__p"),
-            o_lex.alias("__o"),
-            o_lang.alias("__ol"),
-            o_dt.alias("__od"),
-        ]
-        if _is_var(o) and o in term_meta:
-            if obj_kind == "literal":
-                lang_c = F.coalesce(o_lang, F.lit(""))
-                dt_c = F.when(
-                    o_lang.isNotNull(), F.lit(_RDF_LANGSTRING)
-                ).otherwise(F.coalesce(o_dt, F.lit(_XSD_STRING)))
-            else:  # IRI / bnode objects: LANG/DATATYPE is a type error
-                lang_c = F.lit(None).cast("string")
-                dt_c = F.lit(None).cast("string")
-            sel.append(lang_c.alias(META_LANG + o[1:]))
-            sel.append(dt_c.alias(META_DT + o[1:]))
-            sel.append(F.lit(obj_kind).alias(META_KIND + o[1:]))
-        if _is_var(s) and s in term_meta and s != o:
-            # subject-position term metadata: kind is table metadata;
-            # LANG/DATATYPE of an IRI/bnode is a type error -> NULL
-            sel.append(F.lit(None).cast("string").alias(META_LANG + s[1:]))
-            sel.append(F.lit(None).cast("string").alias(META_DT + s[1:]))
-            sel.append(F.lit(subject_kind).alias(META_KIND + s[1:]))
-        if graph is not None:
-            sel.append(g_col.alias("__gid"))
-        out = df.select(*sel).where(
-            F.col("__s").isNotNull() & F.col("__o").isNotNull()
+    else:
+        # one scanner call (plans.r2rml), pruned to the matching predicate
+        # maps at plan time: a constant predicate keeps its own maps
+        # (partition pruning by construction); a variable predicate keeps
+        # all, a negated property set all but the EXCLUDED ones — no
+        # per-row predicate comparison either way
+        keep = (
+            (lambda pm: pm.predicate not in p.predicates) if is_neg
+            else None if p_is_var
+            else (lambda pm: pm.predicate == p_match)
         )
-        if explode_graphs:
-            out = out.withColumn("__gid", F.explode("__gid")).withColumn(
-                "__gid", F.col("__gid").cast("bigint")
-            )
-        return out
-
-    def graph_col(gc, virtual_col=None):
-        """(g_col expression, explode?) for one predicate map's graph
-        column; ``virtual_col`` overrides the constant for fused scans
-        (the per-table virtual graph id arrives as a joined column)."""
-        if graph is None:
-            return F.lit(None), False
-        if gc is None:
-            return F.lit(None).cast("bigint"), False
-        if not gc.physical:
-            base = virtual_col if virtual_col is not None else F.lit(
-                virtual_graph_id(gc)
-            )
-            return base.cast("bigint"), False
-        if gc.part == "graph_set":
-            return F.col(gc.name), True  # exploded in finish_piece
-        return F.col(gc.name).cast("bigint"), False
-
-    def _stacked_piece(t, pms):
-        """ONE scan of a multi-predicate (merged) table serving ALL its
-        matched predicate maps: each map's term expressions pack into an
-        array-of-structs element and one explode unpacks — T predicate
-        maps cost one table scan and one analyzer pass instead of T
-        union branches. This is the merged-table twin of _fused_scan's
-        vocabulary-scale fix: a real KG merges overlapping-subject
-        predicate tables into wide rows (cf. the reference's merge
-        cascade), so a variable-predicate pattern over a 10^3-predicate
-        merged table would otherwise build 10^3 branches over the SAME
-        file."""
-        df = reader(t)
-        if dicts:
-            by_name = {cs.name: cs for cs in t.subject_columns}
-            for pm in pms:
-                by_name.update({cs.name: cs for cs in pm.columns})
-            df = _decode_encoded(df, list(by_name.values()), dicts)
-        s_lex, _, _ = _term_exprs(t.subject_columns, t.subject_kind)
-        structs = []
-        for pm in pms:
-            o_lex, o_lang, o_dt = _term_exprs(pm.columns, pm.obj_kind)
-            fields = [
-                F.lit(pm.predicate).alias("p"),
-                o_lex.alias("o"),
-                o_lang.alias("ol"),
-                o_dt.alias("od"),
-                F.lit(pm.obj_kind).alias("k"),
-            ]
-            if graph is not None:
-                gc = pm.graph_column
-                if gc is None:
-                    g_arr = F.array(F.lit(None).cast("bigint"))
-                elif not gc.physical:
-                    g_arr = F.array(
-                        F.lit(virtual_graph_id(gc)).cast("bigint")
-                    )
-                elif gc.part == "graph_set":
-                    g_arr = F.col(gc.name).cast("array<bigint>")
-                else:
-                    g_arr = F.array(F.col(gc.name).cast("bigint"))
-                fields.append(g_arr.alias("g"))
-            st = F.struct(*fields)
-            if pm.merged:
-                # merged-map presence guard (_merged_presence_filter), as
-                # a NULL struct instead of a per-branch where: a
-                # non-matched row must not fabricate the map's virtual
-                # constants; NULL structs fall to the __o filter below
-                phys = [cs.name for cs in pm.columns if cs.physical]
-                gc = pm.graph_column
-                if gc is not None and gc.physical:
-                    phys.append(gc.name)
-                if phys:
-                    present = F.lit(False)
-                    for name in phys:
-                        present = present | F.col(name).isNotNull()
-                    st = F.when(present, st)
-            structs.append(st)
-        df = df.select(
-            s_lex.alias("__s"), F.explode(F.array(*structs)).alias("__x")
-        ).where(F.col("__s").isNotNull() & F.col("__x.o").isNotNull())
-        sel = [
-            F.col("__s"),
-            F.col("__x.p").alias("__p"),
-            F.col("__x.o").alias("__o"),
-            F.col("__x.ol").alias("__ol"),
-            F.col("__x.od").alias("__od"),
-        ]
+        df = reconstruct_triples(
+            catalog, reader, dicts, keep, graph_needed=graph is not None
+        ).toDF(
+            "__sk", "__s", "__p", "__ok", "__o", "__ol", "__od",
+            *(("__gid",) if graph is not None else ()),
+        )
+        meta = []
         if _is_var(o) and o in term_meta:
-            # per-map object kind travels as the struct's k field
-            is_lit = F.col("__x.k") == "literal"
-            lang_c = F.when(is_lit, F.coalesce(F.col("__x.ol"), F.lit("")))
-            dt_c = F.when(
-                is_lit,
+            # from the per-row object kind; Catalyst constant-folds it on
+            # single-map branches. IRI/bnode objects: LANG/DATATYPE is a
+            # type error -> NULL
+            is_lit = F.col("__ok") == "literal"
+            meta += [
+                F.when(is_lit, F.coalesce("__ol", F.lit(""))).alias(
+                    META_LANG + o[1:]
+                ),
                 F.when(
-                    F.col("__x.ol").isNotNull(), F.lit(_RDF_LANGSTRING)
-                ).otherwise(F.coalesce(F.col("__x.od"), F.lit(_XSD_STRING))),
-            )
-            sel.append(lang_c.alias(META_LANG + o[1:]))
-            sel.append(dt_c.alias(META_DT + o[1:]))
-            sel.append(F.col("__x.k").alias(META_KIND + o[1:]))
+                    is_lit,
+                    F.when(
+                        F.col("__ol").isNotNull(), F.lit(_RDF_LANGSTRING)
+                    ).otherwise(F.coalesce("__od", F.lit(_XSD_STRING))),
+                ).alias(META_DT + o[1:]),
+                F.col("__ok").alias(META_KIND + o[1:]),
+            ]
         if _is_var(s) and s in term_meta and s != o:
-            sel.append(F.lit(None).cast("string").alias(META_LANG + s[1:]))
-            sel.append(F.lit(None).cast("string").alias(META_DT + s[1:]))
-            sel.append(F.lit(t.subject_kind).alias(META_KIND + s[1:]))
-        if graph is not None:
-            sel.append(F.col("__x.g").alias("__gid"))
-        out = df.select(*sel)
-        if graph is not None:
-            out = out.withColumn("__gid", F.explode("__gid")).withColumn(
-                "__gid", F.col("__gid").cast("bigint")
-            )
-        return out
-
-    pieces = []
-    singles: list = []
-    fuse_groups: dict = {}
-    table_pms: dict[int, list] = {}
-    table_by_id: dict = {}
-    raw_fn = getattr(reader, "batch_raw", None)
-    for t in (() if compound else catalog.tables):
-        for pm in t.predicates:
-            if is_neg:
-                # negated property set: prune the EXCLUDED maps at plan
-                # time; every other map contributes (like a variable
-                # predicate, no per-row predicate comparison)
-                if pm.predicate in p.predicates:
-                    continue
-            elif not p_is_var and pm.predicate != p_match:
-                continue
-            table_pms.setdefault(id(t), []).append(pm)
-            table_by_id[id(t)] = t
-    for tid, pms in table_pms.items():
-        t = table_by_id[tid]
-        if len(pms) >= _STACK_MIN:
-            # merged table with several matched maps: one stacked scan
-            pieces.append(_stacked_piece(t, pms))
-            continue
-        for pm in pms:
-            sig = _fuse_sig(t, pm, graph is not None) if raw_fn else None
-            if sig is None:
-                singles.append((t, pm))
-            else:
-                fuse_groups.setdefault(sig, []).append((t, pm))
-    for sig in [k for k, v in fuse_groups.items() if len(v) == 1]:
-        # a lone member gains nothing from the constants join
-        singles.append(fuse_groups.pop(sig)[0])
-    for t, pm in singles:
-        df = reader(t)
-        if dicts:
-            df = _decode_encoded(df, [*t.subject_columns, *pm.columns], dicts)
-        df = _merged_presence_filter(df, pm)
-        s_lex, _, _ = _term_exprs(t.subject_columns, t.subject_kind)
-        o_lex, o_lang, o_dt = _term_exprs(pm.columns, pm.obj_kind)
-        g_col, explode_graphs = graph_col(pm.graph_column)
-        pieces.append(finish_piece(
-            df, s_lex, o_lex, o_lang, o_dt, t.subject_kind, pm.obj_kind,
-            F.lit(pm.predicate), g_col, explode_graphs,
-        ))
-    for sig, members in fuse_groups.items():
-        # one branch per STRUCTURE, not per table: the vocabulary-scale
-        # path for variable/negated-predicate patterns (see _fuse_sig)
-        df, (s_lex, o_lex, o_lang, o_dt), pm2, t0, pm0 = _fused_scan(
-            raw_fn(sig[0]), members, dicts, graph is not None
-        )
-        g_col, explode_graphs = graph_col(
-            pm2.graph_column, virtual_col=F.col("__gv")
-        )
-        pieces.append(finish_piece(
-            df, s_lex, o_lex, o_lang, o_dt, t0.subject_kind, pm0.obj_kind,
-            F.col("__p"), g_col, explode_graphs,
-        ))
-    if not pieces and not compound:
-        # a predicate absent from the catalog matches NOTHING (SPARQL:
-        # zero solutions), not an error — OPTIONAL/MINUS groups over it
-        # must still compile (to unbound / no removals)
-        from pyspark.sql import SparkSession
-
-        schema = "__s string, __p string, __o string, __ol string, __od string"
-        if _is_var(o) and o in term_meta:
-            schema += (
-                f", `{META_LANG}{o[1:]}` string, `{META_DT}{o[1:]}` string"
-                f", `{META_KIND}{o[1:]}` string"
-            )
-        if _is_var(s) and s in term_meta and s != o:
-            schema += (
-                f", `{META_LANG}{s[1:]}` string, `{META_DT}{s[1:]}` string"
-                f", `{META_KIND}{s[1:]}` string"
-            )
-        if graph is not None:
-            schema += ", __gid bigint"
-        pieces = [SparkSession.getActiveSession().createDataFrame([], schema)]
-    if not compound:
-        df = _balanced_union(pieces)
+            # subject-position term metadata: LANG/DATATYPE of an
+            # IRI/bnode is a type error -> NULL
+            none = F.lit(None).cast("string")
+            meta += [
+                none.alias(META_LANG + s[1:]),
+                none.alias(META_DT + s[1:]),
+                F.col("__sk").alias(META_KIND + s[1:]),
+            ]
+        if meta:
+            df = df.select("*", *meta)
 
     if not compound and graph is not None and not g_is_var:
         # the filter runs BEFORE any closure so paths stay inside the

@@ -182,17 +182,31 @@ def test_lsh_truncation_stats(spark):
 
 
 def test_hyperplane_arrow_matches_catalyst(spark):
-    """The Arrow matmul fast path produces EXACTLY the Catalyst fold's
-    buckets (and therefore identical candidate pairs) on the fixture
-    embeddings — use_arrow is a pure physical-plan swap."""
-    from r2s2_spark.operators.dedup import embedding_candidate_pairs
+    """The Arrow matmul bucketer (the one embedding_candidate_pairs uses)
+    gives EXACTLY the Catalyst fold's bucket (the DuckDB oracle's twin)
+    for every fixture embedding and band."""
+    from pyspark.sql import functions as F
+
+    from r2s2_spark.functions.hashing import (
+        hyperplane_bucket,
+        hyperplane_buckets_pandas,
+        rademacher_planes,
+    )
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    catalyst = embedding_candidate_pairs(emb, n_bits=8, n_bands=4, dim=64)
-    arrow = embedding_candidate_pairs(emb, n_bits=8, n_bands=4, dim=64, use_arrow=True)
-    a = {(r.a_id, r.b_id) for r in catalyst.collect()}
-    b = {(r.a_id, r.b_id) for r in arrow.collect()}
-    assert a == b and len(a) > 0
+    bands = [rademacher_planes(8, 64, band=b) for b in range(4)]
+    catalyst = emb.select(
+        "vec_id",
+        *[
+            hyperplane_bucket(F.col("embedding"), planes).alias(f"bkt{i}")
+            for i, planes in enumerate(bands)
+        ],
+    )
+    arrow = hyperplane_buckets_pandas(emb, "embedding", bands, "vec_id")
+    a = sorted(tuple(r) for r in catalyst.collect())
+    b = sorted(tuple(r) for r in arrow.select(*catalyst.columns).collect())
+    assert a == b and len(a) == emb.count()
+    assert len({r[1] for r in a}) > 1  # buckets really vary
 
 
 def test_ann_index_partition_pruning(spark, tmp_path):

@@ -614,7 +614,7 @@ def test_fused_varpred_scan_matches_per_table(spark, tmp_path, monkeypatch):
     must be result-identical to the per-table path for every term shape:
     IRI / plain / typed / language-tagged objects, named graphs, and
     term-metadata (LANG/DATATYPE) columns riding the scan."""
-    from r2s2_spark.plans import sparql as sq
+    from r2s2_spark.plans import r2rml as rr
     from r2s2_spark.plans.sparql_text import sparql_query
 
     pipe = _mixed_shape_kg(spark, tmp_path, "fuse")
@@ -637,7 +637,7 @@ def test_fused_varpred_scan_matches_per_table(spark, tmp_path, monkeypatch):
     # sanity: the fused path actually engaged (batched tables fuse)
     cat = pipe.catalog(pipe.last_catalog_stage())
     sigs = {
-        sq._fuse_sig(t, pm, True)
+        rr._fuse_sig(t, pm, True)
         for t in cat.tables
         for pm in t.predicates
         if t.storage_columns and t.path and "/t=" in t.path
@@ -654,7 +654,7 @@ def test_fused_varpred_scan_matches_per_table(spark, tmp_path, monkeypatch):
     # signatures than (table, pm) pairs
     assert 0 < len(sigs) < n_batched_pairs / 2
 
-    monkeypatch.setattr(sq, "_fuse_sig", lambda *a, **k: None)
+    monkeypatch.setattr(rr, "_fuse_sig", lambda *a, **k: None)
     per_table = [rows(q) for q in queries]
     assert fused == per_table
     assert all(len(r) > 0 for r in fused)
@@ -662,7 +662,7 @@ def test_fused_varpred_scan_matches_per_table(spark, tmp_path, monkeypatch):
 
 def _merged_wide_kg(spark, tmp_path, wd: str) -> KgPipeline:
     """SHARED subjects across many predicates -> stage M merges them into
-    one wide multi-predicate table: the shape _stacked_piece targets.
+    one wide multi-predicate table: the shape _stacked_table_triples targets.
     Covers every object term shape (IRI / plain / typed / lang-tagged),
     named graphs, and a PARTIAL predicate (only half the subjects) whose
     merged map exercises the NULL-struct presence guard."""
@@ -691,7 +691,7 @@ def test_stacked_merged_scan_matches_per_map(spark, tmp_path, monkeypatch):
     every term shape, graph binding, term metadata, and the merged-map
     presence guard (a row missing the partial predicate must not
     fabricate its virtual constants)."""
-    from r2s2_spark.plans import sparql as sq
+    from r2s2_spark.plans import r2rml as rr
     from r2s2_spark.plans.sparql_text import sparql_query
 
     pipe = _merged_wide_kg(spark, tmp_path, "stack")
@@ -713,12 +713,12 @@ def test_stacked_merged_scan_matches_per_map(spark, tmp_path, monkeypatch):
     # sanity: a genuinely multi-predicate merged table exists, so the
     # stacked path actually engaged
     cat = pipe.catalog(pipe.last_catalog_stage())
-    assert max(len(t.predicates) for t in cat.tables) >= sq._STACK_MIN
+    assert max(len(t.predicates) for t in cat.tables) >= rr._STACK_MIN
     # presence guard: exactly the 4 loaded ex:part rows, none fabricated
     part = [r for r in stacked[0] if r[1] == EX + "part"]
     assert sorted(p[2] for p in part) == ["p0", "p1", "p2", "p3"]
 
-    monkeypatch.setattr(sq, "_STACK_MIN", 10**9)
+    monkeypatch.setattr(rr, "_STACK_MIN", 10**9)
     per_map = [rows(q) for q in queries]
     assert stacked == per_map
     assert all(len(r) > 0 for r in stacked)
@@ -749,9 +749,11 @@ def test_stacked_reconstruct_triples_matches_per_map(spark, tmp_path, monkeypatc
     registered `triples` view) over a merged multi-predicate table must
     be identical whether it runs as ONE stacked scan (production), as
     per-map branches over the fused batch scan, or as plain per-(table,
-    map) branches."""
+    map) branches. SPARQL compiles its patterns through the same scanner:
+    in each mode, ``GRAPH ?g { ?s ?p ?o }`` returns exactly the
+    reconstructed triples that carry a graph."""
     from r2s2_spark.plans import r2rml as rr
-    from r2s2_spark.plans import sparql as sq
+    from r2s2_spark.plans.sparql_text import sparql_query
 
     pipe = _merged_wide_kg(spark, tmp_path, "stackr")
 
@@ -760,13 +762,31 @@ def test_stacked_reconstruct_triples_matches_per_map(spark, tmp_path, monkeypatc
             tuple(str(v) for v in r) for r in pipe.triples().collect()
         )
 
+    def graph_rows():
+        got = sparql_query(
+            pipe, "SELECT ?s ?p ?o ?g WHERE { GRAPH ?g { ?s ?p ?o } }"
+        ).select("s", "p", "o", "g")
+        want = pipe.triples_with_graph_iri().where("g IS NOT NULL").select(
+            "s", "p", "o_lex", "g"
+        )
+        got, want = (
+            sorted(tuple(str(v) for v in r) for r in df.collect())
+            for df in (got, want)
+        )
+        # the loader puts graph-less statements in its default graph
+        assert got == want and len(got) == 44
+        return got
+
     stacked = rows()
+    stacked_g = graph_rows()
     assert len(stacked) == 44  # 8 subjects x 5 predicates + 4 partial
     monkeypatch.setattr(rr, "_STACK_MIN", 10**9)
     fused = rows()
-    monkeypatch.setattr(sq, "_fuse_sig", lambda *a, **k: None)
+    fused_g = graph_rows()
+    monkeypatch.setattr(rr, "_fuse_sig", lambda *a, **k: None)
     per_map = rows()
     assert stacked == fused == per_map
+    assert stacked_g == fused_g == graph_rows()
 
 
 def test_graph_terms_via_reconstruct(spark, tmp_path):
